@@ -11,7 +11,7 @@ cannot express the semantics (and then as Arrow-batched pandas UDFs).
 Reference parity map (see SURVEY.md §2): the reference's operators O1-O15 are
 realized here as:
   O1/O2   -> ``spark.read.text`` split planning          (io/flf.py)
-  O3-O10  -> ``parse_flf`` column expressions             (io/flf.py)
+  O3-O10  -> ``parse_flf`` staged SQL projections         (io/flf.py)
   O11-O13 -> ``Converter`` sinks parquet/delta/iceberg/ipc/flf (converter.py)
   O14     -> ``Mocker``                                   (mocker.py)
   O15     -> Spark executors/tasks (automatic)

@@ -18,7 +18,9 @@ engine implements all four targets plus the FLF re-encode sink:
   analogue); avro — native container-file codec (``io/avro.py``), no
   spark-avro module needed
 
-Whole pipeline: ``spark.read.text`` -> one codegen'd projection -> sink.
+Whole pipeline: ``spark.read.text`` -> the staged parse projections of
+``io/flf.py`` (slice, trim, cast, enforce; whole-stage codegen fuses them
+into one stage) -> sink.
 Narrow (shuffle-free), scales linearly with input splits; every task writes
 its own part file, so the reference's single-writer thread (converter.rs:295-298)
 has no analogue here. ``single_file=True`` restores one-output-file parity via
@@ -36,7 +38,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from evolution_spark.io.avro import write_avro
 from evolution_spark.io.delta_log import write_delta_snapshot
-from evolution_spark.io.flf import read_flf, scoped_max_partition_bytes, write_flf
+from evolution_spark.io.flf import (
+    parse_failures,
+    read_flf,
+    scoped_max_partition_bytes,
+    write_flf,
+)
 from evolution_spark.io.ipc import write_ipc
 from evolution_spark.schema import FixedSchema
 
@@ -107,7 +114,9 @@ class Converter:
     def validate(self, spark: SparkSession, sample_rows: int = 20) -> DataFrame:
         """Eager two-pass validation (SURVEY §4.2 note on O9): returns a
         DataFrame of rows that would abort the conversion — (line, column,
-        raw_field) for every parse failure on a non-nullable column.
+        raw_field) for every parse failure on a non-nullable column, found by
+        the same staged parse expressions ``run()`` uses
+        (``io.flf.parse_failures``).
 
         The default ``run()`` path stays single-pass (``raise_error`` aborts
         on the first bad row); use this when you want the full defect list
@@ -115,32 +124,8 @@ class Converter:
         ``sample_rows`` limits the result via ``limit`` — the scan
         short-circuits once enough failures are found.
         """
-        from pyspark.sql import functions as F
-
-        from evolution_spark.io.flf import parse_column
-
         lines = spark.read.text(self.input_path)
-        checks = []
-        for c in self.schema.columns:
-            if c.is_nullable or c.dtype in ("Utf8", "LargeUtf8"):
-                continue
-            typed = parse_column(F.col("value"), c, mode="permissive")
-            raw = F.substring(F.col("value"), c.offset + 1, c.length)
-            checks.append(
-                F.when(typed.isNull(), F.struct(F.lit(c.name).alias("column"), raw.alias("raw_field")))
-            )
-        if not checks:
-            return spark.createDataFrame([], "line string, column string, raw_field string")
-        failures = (
-            lines.select(
-                F.col("value").alias("line"),
-                F.explode(
-                    F.filter(F.array(*checks), lambda x: x.isNotNull())
-                ).alias("f"),
-            )
-            .select("line", "f.column", "f.raw_field")
-        )
-        return failures.limit(sample_rows)
+        return parse_failures(lines, self.schema).limit(sample_rows)
 
     def run(self, spark: SparkSession) -> None:
         # The split-size knob is read by Spark when the job RUNS, so it must

@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from evolution_spark.io.sqltext import quote_ident
+
 
 def write_range_clustered(
     df: DataFrame,
@@ -47,12 +49,6 @@ def write_range_clustered(
         .write.mode(mode)
         .parquet(path)
     )
-
-
-def _quote_ident(name: str) -> str:
-    """Backtick-quote a column name for embedding in a SQL string
-    (backticks inside the name escape by doubling, per the SQL parser)."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _morton_interleave_sql(col_sqls: list[str], bits: int) -> str:
@@ -107,10 +103,10 @@ def zorder_dataframe(
     # chain, a single py4j round trip instead of hundreds
     scaled = []
     for c in cols:
-        mn, mx = _quote_ident(f"__mn_{c}"), _quote_ident(f"__mx_{c}")
+        mn, mx = quote_ident(f"__mn_{c}"), quote_ident(f"__mx_{c}")
         span = f"(CASE WHEN {mx} > {mn} THEN ({mx} - {mn}) ELSE 1.0D END)"
         scaled.append(
-            f"least(CAST(floor((CAST({_quote_ident(c)} AS DOUBLE) - {mn})"
+            f"least(CAST(floor((CAST({quote_ident(c)} AS DOUBLE) - {mn})"
             f" / {span} * {top}) AS BIGINT), CAST({top} AS BIGINT))"
         )
     z = F.expr(_morton_interleave_sql(scaled, bits))

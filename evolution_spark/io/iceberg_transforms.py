@@ -37,6 +37,8 @@ Spec-exactness of ``bucket`` is pinned by the Appendix B test vectors
 # hints must bind the locally-imported ``pd`` eagerly at def time
 import re
 
+from evolution_spark.io.sqltext import quote_ident
+
 __all__ = [
     "murmur3_32",
     "bucket_hash",
@@ -358,8 +360,10 @@ def with_transform_column(df, out_name: str, transform: str,
             out_name, transform_column(transform, col_name, source_type)
         )
     n = _transform_arg(transform)
-    t = f"__bkt_{out_name}"
-    qc = "`" + col_name.replace("`", "``") + "`"
+    # temp names stay bare identifiers whatever out_name holds, so the
+    # stage references below need no quoting
+    t = f"__bkt_{out_name.encode().hex()}"
+    qc = quote_ident(col_name)
 
     # the staged chain is issued as ONE selectExpr whose items reference
     # earlier items by LATERAL COLUMN ALIAS (Spark 3.4+): the analyzer
@@ -408,7 +412,7 @@ def with_transform_column(df, out_name: str, transform: str,
             f"CAST(pmod(({t}_f5 & {0x7FFFFFFF}), {n}) AS INT) END",
         ),
     ]
-    df = df.selectExpr("*", *[f"{sql} AS `{name}`" for name, sql in stages])
+    df = df.selectExpr("*", *[f"{sql} AS {quote_ident(name)}" for name, sql in stages])
     return df.drop(*[name for name, _ in stages[:-1]])
 
 

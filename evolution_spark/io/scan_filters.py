@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from evolution_spark.io.sqltext import quote_ident
+
 # matches any URI scheme prefix (file:/, file:///, hdfs://host/ is NOT
 # fully handled — local-fs engines only, like the rest of the native
 # table readers)
@@ -137,7 +139,7 @@ def per_file_constant_columns(
                 f"'{p.rsplit('/', 1)[-1]}',{_sql_long(consts[k])}"
                 for p, consts in per_file
             )
-            cols.append(F.expr(f"map({entries})[`{basename_col}`]"))
+            cols.append(F.expr(f"map({entries})[{quote_ident(basename_col)}]"))
         return df, cols
     schema = ", ".join(
         ["__pfc_file string"] + [f"__pfc_{k} long" for k in range(arity)]

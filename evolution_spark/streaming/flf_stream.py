@@ -4,7 +4,8 @@ directory are parsed with the same strict semantics and appended to a
 Parquet (or any) sink continuously.
 
 The parse is the identical ``parse_flf`` expression set used in batch
-(io/flf.py): one narrow codegen'd projection per micro-batch, no state, no
+(io/flf.py): its staged projections fuse into one narrow codegen'd stage
+per micro-batch, no state, no
 shuffle — at cluster scale this sustains scan-rate conversion with
 end-to-end exactly-once into the parquet sink (checkpointed file source +
 transactional file sink)."""

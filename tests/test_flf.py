@@ -6,12 +6,17 @@ numbers, zero padding, strict booleans, center alignment, non-nullable abort).
 from __future__ import annotations
 
 import math
+import random
+import re
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.errors import PySparkException
 
+from evolution_spark.converter import Converter
 from evolution_spark.io.flf import encode_flf, parse_flf, read_flf, write_flf
-from evolution_spark.schema import FixedSchema
+from evolution_spark.schema import SPARK_DTYPES, FixedSchema
 
 EDGE = FixedSchema.from_dict(
     {
@@ -276,3 +281,234 @@ def test_gzipped_flf_input(spark, tmp_path):
     got = Converter(str(gzdir), sch, "unused").dataframe(spark)
     assert got.count() == 200
     assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
+
+
+# ---------------------------------------------------------------------------
+# Parity against a pure-Python reference parser (hypothesis)
+# ---------------------------------------------------------------------------
+
+_INT_RANGE = {"Int16": 2**15, "Int32": 2**31, "Int64": 2**63}
+# Java's Double/Float.parseDouble grammar (decimal forms only: the
+# generator never emits hex floats), after Java's trim of chars <= U+0020.
+_JAVA_FLOAT = re.compile(r"[+-]?(NaN|Infinity|([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?[fFdD]?)")
+# Spark's case-insensitive special literals, tried when Java's parse fails.
+_SPARK_FLOAT_SPECIAL = {
+    "inf": math.inf, "+inf": math.inf, "infinity": math.inf, "+infinity": math.inf,
+    "-inf": -math.inf, "-infinity": -math.inf, "nan": math.nan,
+}
+
+
+def _java_trim(s: str) -> str:
+    i, j = 0, len(s)
+    while i < j and s[i] <= " ":
+        i += 1
+    while j > i and s[j - 1] <= " ":
+        j -= 1
+    return s[i:j]
+
+
+def _ref_float(text: str):
+    if text == "":
+        return None
+    s = _java_trim(text)
+    if _JAVA_FLOAT.fullmatch(s):
+        return float(s.rstrip("fFdD"))  # Python reads NaN/Infinity too
+    return _SPARK_FLOAT_SPECIAL.get(s.lower())
+
+
+def _ref_int(text: str, raw: str, pad: str, dtype: str):
+    if text == "" and pad.isdigit() and re.fullmatch(r"-?[0-9]+", raw):
+        text = raw  # an all-digit-pad field is the number the pad spells
+    if not re.fullmatch(r"-?[0-9]+", text):
+        return None
+    v = int(text)
+    bound = _INT_RANGE[dtype]
+    return v if -bound <= v < bound else None
+
+
+def ref_parse_field(line: str, c):
+    """One field of one line, the way the reference pipeline reads it:
+    rune slice, pad trim per alignment, strict cast. Returns (value, raw);
+    value None is a parse failure (or an all-pad non-text field)."""
+    raw = line[c.offset:c.offset + c.length]
+    pad = c.pad_char
+    text = {"Left": raw.rstrip, "Right": raw.lstrip, "Center": raw.strip}[c.alignment](pad)
+    if c.dtype in ("Utf8", "LargeUtf8"):
+        return text, raw
+    if c.dtype == "Boolean":
+        return {"true": True, "false": False}.get(text), raw
+    if c.dtype in _INT_RANGE:
+        return _ref_int(text, raw, pad, c.dtype), raw
+    return _ref_float(text), raw
+
+
+def ref_abort_message(c, raw: str) -> str:
+    return (f"could not parse non-nullable column '{c.name}' "
+            f"(dtype {c.dtype}) from field value '{raw}'")
+
+
+def ref_parse(lines, schema, mode):
+    """Rows in permissive mode; in abort mode, the message of the first
+    failing non-nullable field (rows in order, columns in schema order),
+    or the rows when nothing fails."""
+    rows = []
+    for line in lines:
+        row = []
+        for c in schema.columns:
+            v, raw = ref_parse_field(line, c)
+            if v is None and mode == "abort" and not c.is_nullable \
+                    and c.dtype not in ("Utf8", "LargeUtf8"):
+                return ref_abort_message(c, raw)
+            row.append(v)
+        rows.append(tuple(row))
+    return rows
+
+
+def _same_value(got, want, dtype) -> bool:
+    if want is None or got is None:
+        return got is want
+    if isinstance(want, float):
+        if math.isnan(want):
+            return math.isnan(got)
+        if dtype in ("Float16", "Float32") and not math.isinf(want):
+            return math.isclose(got, want, rel_tol=1e-6, abs_tol=1e-30)
+    return got == want and type(got) is type(want)
+
+
+_PADS = ["Whitespace", "Zero", "Five", "Backslash", "Underscore", "Asterisk"]
+_NAMES = ["id", "a`b", "c-d", "e'f", "g h", "x\\y"]
+_TOKENS = [
+    "0", "7", "-42", "+5", " 5", "5 ", "1.0", "-0", "007", "", "true", "false",
+    "TRUE", "t", "1", "1.5", "-3.14e2", ".5", "1.", "1e5", "inf", "-Infinity",
+    "NaN", "nan", "1.5f", "é5", "実験", "😀1", "\t1.5", "2\xa0", "　3",
+    "_5_", "\\7", "*", "55", "00", "--1", "9" * 20,
+    str(2**15 - 1), str(2**15), str(-(2**15)), str(-(2**15) - 1),
+    str(2**31 - 1), str(2**31), str(-(2**31)), str(-(2**31) - 1),
+    str(2**63 - 1), str(2**63), str(-(2**63)), str(-(2**63) - 1),
+]
+_ALPHABET = "0123456789-+.e truefalsNI_*\\5é実😀\t\xa0　"
+
+
+@st.composite
+def _schemas(draw):
+    n = draw(st.integers(min_value=1, max_value=4))
+    names = draw(st.permutations(_NAMES))[:n]
+    cols, offset = [], 0
+    for name in names:
+        offset += draw(st.integers(min_value=0, max_value=2))  # gap
+        length = draw(st.integers(min_value=1, max_value=21))
+        cols.append({
+            "name": name, "offset": offset, "length": length,
+            "dtype": draw(st.sampled_from(sorted(SPARK_DTYPES))),
+            "alignment": draw(st.sampled_from(["Left", "Right", "Center"])),
+            "pad_symbol": draw(st.sampled_from(_PADS)),
+            "is_nullable": draw(st.booleans()),
+        })
+        offset += length
+    return FixedSchema.from_dict({"name": "P", "version": 1, "columns": cols})
+
+
+def _padded(token: str, c) -> str:
+    gap = max(c.length - len(token), 0)
+    pad = c.pad_char
+    if c.alignment == "Left":
+        return token + pad * gap
+    if c.alignment == "Right":
+        return pad * gap + token
+    return pad * (gap // 2) + token + pad * (gap - gap // 2)
+
+
+@st.composite
+def _lines(draw, schema):
+    line = ""
+    for c in sorted(schema.columns, key=lambda c: c.offset):
+        line += " " * (c.offset - len(line))
+        kind = draw(st.sampled_from(["token", "token", "random", "pad"]))
+        if kind == "token":
+            field = _padded(draw(st.sampled_from(_TOKENS)), c)
+        elif kind == "random":
+            field = draw(st.text(_ALPHABET, min_size=c.length, max_size=c.length))
+        else:
+            field = c.pad_char * c.length
+        line += field  # an overlong token shifts later fields, on purpose
+    cut = draw(st.sampled_from(["keep", "keep", "short", "long"]))
+    if cut == "short":
+        line = line[:draw(st.integers(min_value=0, max_value=len(line)))]
+    elif cut == "long":
+        line += draw(st.text(_ALPHABET, min_size=1, max_size=5))
+    return line
+
+
+@st.composite
+def _batches(draw):
+    schema = draw(_schemas())
+    lines = draw(st.lists(_lines(schema), min_size=1, max_size=12))
+    mode = draw(st.sampled_from(["permissive", "abort"]))
+    return schema, lines, mode
+
+
+@given(batch=_batches())
+@settings(max_examples=40, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
+def test_parse_matches_reference_parser(spark, batch):
+    """``parse_flf`` agrees with the pure-Python reference on every dtype,
+    alignment and pad, multibyte runes at field edges, sign/space/decimal
+    forms in Int fields, Int16/32/64 overflow, lax booleans, all-pad fields
+    and short or overlong lines. Permissive mode compares values; abort
+    mode compares raise / no-raise and the message text. One Spark job per
+    example. (Lines never hold CR/LF: a text source splits on them.)"""
+    schema, lines, mode = batch
+    df = spark.createDataFrame([(l,) for l in lines], "value string").coalesce(1)
+    want = ref_parse(lines, schema, mode)
+    try:
+        got = [tuple(r) for r in parse_flf(df, schema, mode=mode).collect()]
+    except PySparkException as e:
+        assert isinstance(want, str), f"unexpected abort: {e}"
+        assert want in str(e)
+        return
+    assert not isinstance(want, str), f"expected abort: {want}"
+    assert len(got) == len(want)
+    for g_row, w_row in zip(got, want):
+        for c, g, w in zip(schema.columns, g_row, w_row):
+            assert _same_value(g, w, c.dtype), (c, g, w, lines)
+
+
+def test_validate_matches_reference_parser(spark, tmp_path):
+    """``Converter.validate`` on a seeded defect file lists exactly the
+    non-nullable failures the reference parser flags."""
+    sch = FixedSchema.from_dict({"name": "V", "version": 1, "columns": [
+        {"name": "id", "offset": 0, "length": 8, "dtype": "Int32", "is_nullable": False},
+        {"name": "z", "offset": 8, "length": 6, "dtype": "Int16",
+         "pad_symbol": "Zero", "is_nullable": False},
+        {"name": "f", "offset": 14, "length": 9, "dtype": "Float64", "alignment": "Left",
+         "pad_symbol": "Backslash", "is_nullable": False},
+        {"name": "b-`", "offset": 23, "length": 7, "dtype": "Boolean",
+         "alignment": "Center", "pad_symbol": "Underscore", "is_nullable": False},
+        {"name": "n", "offset": 30, "length": 5, "dtype": "Float32", "is_nullable": True},
+        {"name": "s", "offset": 35, "length": 4, "dtype": "Utf8", "is_nullable": False},
+    ]})
+    rng = random.Random(20261017)
+    lines = []
+    for _ in range(400):
+        fields = []
+        for c in sch.columns:
+            token = rng.choice(_TOKENS) if rng.random() < 0.3 else {
+                "Int32": str(rng.randint(-999, 9999)), "Int16": str(rng.randint(0, 999)),
+                "Float64": f"{rng.uniform(-9, 9):.2f}", "Boolean": rng.choice(["true", "false"]),
+                "Float32": "1.25", "Utf8": "ab",
+            }[c.dtype]
+            fields.append(_padded(token, c)[:c.length])
+        lines.append("".join(fields))
+    path = tmp_path / "defects.flf"
+    path.write_text("\n".join(lines) + "\n", encoding="utf-8")
+    want = sorted(
+        (line, c.name, raw)
+        for line in lines
+        for c in sch.columns
+        if not c.is_nullable and c.dtype != "Utf8"
+        for v, raw in [ref_parse_field(line, c)]
+        if v is None
+    )
+    assert want  # the seed plants defects
+    got = Converter(str(path), sch, "unused").validate(spark, sample_rows=10_000).collect()
+    assert sorted(tuple(r) for r in got) == want

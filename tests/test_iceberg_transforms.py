@@ -469,3 +469,17 @@ def test_staged_bucket_matches_reference_all_integral_types(spark):
         for r in rows
     ]
     assert got == exp
+
+
+def test_staged_bucket_lane_quotes_odd_names(spark):
+    """Source and output names holding a backtick or a hyphen reach the
+    staged lane's SQL quoted: the lane still matches the reference."""
+    from evolution_spark.io.iceberg_transforms import bucket_hash, with_transform_column
+
+    df = spark.createDataFrame([(34,), (-3,), (None,)], "`a``b-c` long")
+    out = with_transform_column(df, "b`k-1", "bucket[16]", "a`b-c", "long")
+    assert out.columns == ["a`b-c", "b`k-1"]
+    got = [r["b`k-1"] for r in out.collect()]
+    exp = [None if v is None else (bucket_hash(v, "long") & 0x7FFFFFFF) % 16
+           for v in (34, -3, None)]
+    assert got == exp

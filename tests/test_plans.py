@@ -96,6 +96,44 @@ def test_flf_parse_is_single_narrow_stage(spark, tmp_path):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+@pytest.mark.parametrize("which", ["bench", "F1", "F4"])
+def test_flf_parse_expression_shape(spark, tmp_path, which):
+    """Each field is sliced, trimmed and cast exactly once per row: the
+    optimized plan of ``Converter.dataframe`` holds one ``substring`` per
+    column, one ``try_cast`` per Int/Float column and one ``RLIKE`` per Int
+    column (two with a digit pad), all in one whole-stage-codegen subtree
+    with no exchange and no Python. A single nested Column tree per field
+    repeats the slice, trim and cast in each CASE branch and fails this."""
+    import contextlib
+    import io
+
+    from evolution_spark.converter import Converter
+    from evolution_spark.schema import BENCH_FLF_SCHEMA_DICT, FixedSchema
+    from tests.test_fixtures import F1_VALID_TEST, F4_EDGE
+
+    sch = {"bench": FixedSchema.from_dict(BENCH_FLF_SCHEMA_DICT),
+           "F1": F1_VALID_TEST, "F4": F4_EDGE}[which]
+    flf = tmp_path / "lines.flf"
+    flf.write_text(" " * sch.row_length + "\n")
+    df = Converter(str(flf), sch, "unused").dataframe(spark)
+    qe = df._jdf.queryExecution()
+    plan = qe.optimizedPlan().toString()
+    assert "more fields" not in plan
+    ints = [c for c in sch.columns if c.dtype.startswith("Int")]
+    floats = [c for c in sch.columns if c.dtype.startswith("Float")]
+    digit_pads = [c for c in ints if c.pad_char.isdigit()]
+    assert plan.count("substring(") == len(sch.columns)
+    assert plan.count("try_cast(") == len(ints) + len(floats)
+    assert plan.count("RLIKE(") == len(ints) + len(digit_pads)
+    executed = qe.executedPlan().toString()
+    assert "Exchange" not in executed
+    assert "BatchEvalPython" not in executed and "ArrowEvalPython" not in executed
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("codegen")
+    assert "Found 1 WholeStageCodegen subtrees" in buf.getvalue()
+
+
 def test_knn_probes_are_broadcast(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "knn_bruteforce_cosine")
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan

@@ -33,6 +33,17 @@ def test_map_literal_fast_path(spark):
     assert _resolve(out, cols) == {0: (100, 7), 1: (None, 9)}
 
 
+def test_map_literal_fast_path_quotes_basename_col(spark):
+    # a backtick or hyphen in the caller's basename column must not break
+    # the map-lookup SQL the fast path builds
+    paths = ["/t/data/part-0.parquet", "/t/data/part-1.parquet"]
+    per_file = [(paths[0], (100, 7)), (paths[1], (None, 9))]
+    df = _frame(spark, paths).withColumnRenamed("__bn", "b`n-x")
+    out, cols = per_file_constant_columns(df, per_file, "b`n-x", "__fp")
+    assert out is df
+    assert _resolve(out, cols) == {0: (100, 7), 1: (None, 9)}
+
+
 def test_join_fallback_on_unsafe_basename(spark):
     # a space is not URL-safe: the raw _metadata URI form would differ
     # from the stored form, so the helper must fall back to the join
