@@ -7,9 +7,10 @@ The reference ships Parquet only (Delta/Iceberg/Ipc are ``todo!()``); this
 engine implements all four targets plus the FLF re-encode sink:
 
 * parquet — ``df.write.parquet`` (reference O11)
-* delta — native single-commit snapshot writer (``io/delta_log.py``), no
-  connector jar (type mapping follows column.rs:153-168, including the
-  Float16->FLOAT widening)
+* delta — native transaction-log writer (``io/delta_log.py``), no
+  connector jar: a new table is version 0, append/overwrite onto an
+  existing table commit the next version (type mapping follows
+  column.rs:153-168, including the Float16->FLOAT widening)
 * iceberg — native v2 snapshot writer (``io/iceberg_meta.py``): parquet
   data + metadata.json/manifest-list/manifest Avro chain, no connector jar
 * ipc — distributed Arrow IPC part files (``evolution_spark.io.ipc``)
@@ -37,7 +38,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from evolution_spark.io.avro import write_avro
-from evolution_spark.io.delta_log import write_delta_snapshot
+from evolution_spark.io.delta_log import commit_delta, write_delta_snapshot
 from evolution_spark.io.flf import (
     parse_failures,
     read_flf,
@@ -170,30 +171,20 @@ class Converter:
         exists = _os.path.exists(self.output_path)
         if target is Target.DELTA:
             # native writer (io/delta_log.py): distributed parquet data +
-            # a spec-compliant _delta_log commit, no connector jar needed.
-            # All four SaveModes map to real log semantics: append is a
-            # new commit, overwrite a remove+add commit, ignore a no-op on
-            # an existing table (target.rs:31-37).
-            from evolution_spark.io.delta_log import _replay_log, commit_delta
-
-            is_table = _os.path.exists(
+            # a spec-compliant _delta_log commit, no connector jar needed
+            # (target.rs:31-37). ignore no-ops on any existing path; append
+            # and overwrite onto a Delta table are a new commit (overwrite:
+            # remove+add); everything else writes version 0 — overwrite
+            # replaces whatever is there, the rest refuse an existing path.
+            if exists and self.save_mode == "ignore":
+                return
+            if self.save_mode in ("append", "overwrite") and _os.path.exists(
                 _os.path.join(self.output_path, "_delta_log")
-            )
-            if self.save_mode == "ignore" and exists:
-                return
-            if exists and not is_table and self.save_mode == "overwrite":
-                # an existing NON-Delta dir (e.g. a prior parquet run at
-                # the same path): overwrite replaces it wholesale
-                write_delta_snapshot(
-                    df, self.output_path, mode="overwrite",
-                    partition_by=self.partition_by,
-                )
-                return
-            if is_table and self.save_mode in ("append", "overwrite"):
+            ):
                 if self.partition_by:
-                    from pathlib import Path as _Path
+                    from evolution_spark.io.delta_log import _replay_log
 
-                    _, _, stored_parts, _ = _replay_log(_Path(self.output_path))
+                    _, _, stored_parts, _ = _replay_log(Path(self.output_path))
                     if list(self.partition_by) != stored_parts:
                         raise ValueError(
                             f"partition_by {self.partition_by} != table's "
@@ -207,7 +198,9 @@ class Converter:
                 commit_delta(df, self.output_path, mode=self.save_mode)
                 return
             write_delta_snapshot(
-                df, self.output_path, partition_by=self.partition_by
+                df, self.output_path,
+                mode="overwrite" if self.save_mode == "overwrite" else "error",
+                partition_by=self.partition_by,
             )
             return
         if target is Target.AVRO:
@@ -254,18 +247,3 @@ class Converter:
                 df, self.output_path, mode=mode, partition_by=self.partition_by
             )
             return
-        # any other format needs its connector on the classpath; fail with
-        # a clear message when absent (this container ships none).
-        writer = df.write.format(target.value).mode(self.save_mode)
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        for k, v in self.writer_options.items():
-            writer = writer.option(k, v)
-        try:
-            writer.save(self.output_path)
-        except Exception as e:  # pragma: no cover - connector-dependent
-            raise RuntimeError(
-                f"{target.value} sink requires the {target.value} connector on the "
-                f"Spark classpath (e.g. delta-spark / iceberg-spark-runtime / "
-                f"spark-avro): {e}"
-            ) from e

@@ -4,22 +4,20 @@ spec-compliant ``_delta_log`` commit, no connector jar required.
 The Delta transaction log is an open JSON protocol (delta.io
 PROTOCOL.md): a table is a directory of parquet files plus
 ``_delta_log/<version>.json`` holding newline-delimited actions
-(``protocol``, ``metaData``, ``add``). This module writes a SINGLE-COMMIT
-snapshot (version 0) of a DataFrame:
-
-* data files: a normal distributed ``df.write.parquet`` — cluster-scale,
-  nothing driver-bound;
-* the commit: the driver lists the written files (a metadata-sized
-  operation — one entry per file), derives per-file ``numRecords`` from
-  parquet footers, and writes the log atomically (temp file + rename).
+(``protocol``, ``metaData``, ``add``). Every commit, version 0 included,
+writes its data with a normal distributed ``df.write.parquet`` into a
+staging dir; the Spark driver then moves the part files into the table (one
+entry per file, stats from parquet footers) and ``_publish_commit`` — the
+one writer of every log version — adds the ``commitInfo`` and publishes
+the version atomically and exclusively (temp file + hard link).
 
 ``metaData.schemaString`` is Spark's ``StructType.json()`` — the Delta
 spec adopts Spark's schema JSON verbatim, so the round-trip is exact.
 Any Delta reader (Spark+delta jar, delta-rs, DuckDB's delta extension)
 can open the result. Scope: version-0 snapshots (``write_delta_snapshot``),
 multi-version APPEND/OVERWRITE/REPLACE commits (``commit_delta`` —
-remove+add actions with per-file min/max stats, create-exclusive
-optimistic-concurrency publish), time-travel reads
+remove+add actions with per-file min/max stats, optimistic-concurrency
+publish), time-travel reads
 (``read_delta_snapshot(version=N)``), file-pruned CDC MERGE
 (``merge_delta_cdc``), streaming idempotence (``txn`` actions +
 ``last_txn_version``), OPTIMIZE compaction (``optimize_delta``),
@@ -373,31 +371,6 @@ def _partition_value(raw: str) -> str | None:
     return unquote(raw)
 
 
-def _data_files(table_dir: Path, part_cols: list[str]):
-    """Yield (relative_path, partition_values, size_bytes) for every data
-    file under the table dir, parsing hive-style partition directories."""
-    for p in sorted(table_dir.rglob("*.parquet")):
-        if "_delta_log" in p.parts or "_change_data" in p.parts or any(
-            part.startswith("_staging_") for part in p.parts
-        ):
-            # _change_data sidecars are referenced by cdc actions, never
-            # by add actions — retention is tied to the log (which this
-            # engine never truncates), not to live-set membership
-            continue
-        rel = p.relative_to(table_dir)
-        values: dict[str, str | None] = {}
-        for part in rel.parts[:-1]:
-            if "=" in part:
-                k, _, v = part.partition("=")
-                values[k] = _partition_value(v)
-        if sorted(values) != sorted(part_cols):
-            raise ValueError(
-                f"partition dirs {sorted(values)} != declared {sorted(part_cols)}"
-            )
-        yield rel.as_posix(), values, p.stat().st_size
-
-
-
 def _file_stats(pq_file) -> dict:
     """Delta-spec add-action stats from a parquet footer: numRecords plus
     per-column minValues/maxValues (int/float/string/bool columns only —
@@ -478,8 +451,6 @@ def write_delta_snapshot(
     commits later. Partitioned mapped tables follow the spec layout:
     directory names AND ``partitionColumns`` AND ``partitionValues`` all
     use the PHYSICAL partition column name."""
-    import pyarrow.parquet as pq
-
     table_dir = Path(path)
     if table_dir.exists():
         if mode == "overwrite":
@@ -521,7 +492,7 @@ def write_delta_snapshot(
         df = df.withColumnsRenamed(phys_of)
         # the spec keys the partition LAYOUT by physical name: directory
         # names, metaData.partitionColumns, and add.partitionValues below
-        # (via _data_files) all carry the physical partition column
+        # (via _collect_staged_adds) all carry the physical partition column
         part_cols = [phys_of.get(c, c) for c in part_cols]
     if _cdf_enabled(config):
         # feature-activation rule: the property obliges writers to emit
@@ -529,25 +500,6 @@ def write_delta_snapshot(
         upgrade = _cdf_protocol_upgrade(protocol)
         if upgrade:
             protocol = upgrade["protocol"]
-    writer = df.write.mode("error")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(str(table_dir))
-
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = []
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "WRITE",
-                "operationParameters": {"mode": "ErrorIfExists"},
-                "engineInfo": "evolution-spark-delta-writer/1.0",
-            }
-        }
-    )
-    if txn is not None:
-        actions.append({"txn": {"appId": txn[0], "version": txn[1]}})
     schema_string = (
         json.dumps({"type": "struct", "fields": mapped_fields})
         if mapped_fields is not None
@@ -579,6 +531,26 @@ def write_delta_snapshot(
                 | {"inCommitTimestamp"}
             ),
         }
+
+    table_dir.mkdir(parents=True)
+    stage = table_dir / f"_staging_v0-{uuid.uuid4().hex}"
+    writer = df.write.mode("error")
+    if part_cols:
+        writer = writer.partitionBy(*part_cols)
+    try:
+        writer.parquet(str(stage))
+        now_ms = int(time.time() * 1000)
+        add_actions, n_files, total_rows = _collect_staged_adds(
+            stage, table_dir, 0, now_ms, data_change=True,
+            spark=df.sparkSession,
+        )
+    finally:
+        if stage.exists():
+            shutil.rmtree(stage)
+
+    actions: list[dict] = []
+    if txn is not None:
+        actions.append({"txn": {"appId": txn[0], "version": txn[1]}})
     actions.append({"protocol": protocol})
     actions.append(
         {
@@ -593,46 +565,14 @@ def write_delta_snapshot(
             }
         }
     )
-    total_rows = 0
-    n_files = 0
-    no_stats: list[str] = []
-    for rel, values, size in _data_files(table_dir, part_cols):
-        try:
-            stats = _file_stats(pq.ParquetFile(table_dir / rel))
-            total_rows += stats["numRecords"]
-        except Exception:
-            # footer carries a logical type pyarrow cannot parse (e.g.
-            # VARIANT) — per-file counts come from one Spark scan below
-            no_stats.append(rel)
-            stats = None
-        n_files += 1
-        add = {
-            # the spec stores paths relative + URL-encoded
-            "path": quote(rel),
-            "partitionValues": values,
-            "size": size,
-            "modificationTime": now_ms,
-            "dataChange": True,
-        }
-        if stats is not None:
-            add["stats"] = json.dumps(stats)
-        actions.append({"add": add})
-    if no_stats:
-        total_rows += _backfill_stats_via_count(
-            df.sparkSession, table_dir,
-            [table_dir / rel for rel in no_stats], actions,
-        )
-
-    log_dir = table_dir / "_delta_log"
-    log_dir.mkdir()
-    # creation-time in-commit-timestamp enablement: v0 itself must carry
-    # the stamp (spec: every commit after enablement)
-    actions = _stamp_ict(table_dir, 0, actions, config)
-    commit = log_dir / f"{0:020d}.json"
-    tmp = log_dir / f".{0:020d}.json.tmp"
-    tmp.write_text("".join(json.dumps(a) + "\n" for a in actions))
-    os.replace(tmp, commit)  # atomic publish: readers never see a torn log
-    return {"version": 0, "files": n_files, "rows": total_rows, "path": str(commit)}
+    actions.extend(add_actions)
+    (table_dir / "_delta_log").mkdir()
+    # creation-time in-commit-timestamp enablement: the publisher stamps
+    # v0 itself (spec: every commit after enablement)
+    _publish_commit(table_dir, 0, actions, "WRITE", {"mode": "ErrorIfExists"},
+                    now_ms=now_ms, config=config)
+    return {"version": 0, "files": n_files, "rows": total_rows,
+            "path": str(table_dir / "_delta_log" / f"{0:020d}.json")}
 
 
 def _log_versions(log_dir: Path) -> list[int]:
@@ -813,8 +753,8 @@ def commit_delta(
     ``'replace'`` removes exactly ``remove_paths`` (stored log paths) — the
     partial-rewrite commit a file-pruned MERGE produces. Removes are
     logical deletes: old versions stay readable, which is what makes time
-    travel work. Publish is optimistic-concurrency: the commit file is written to
-    a temp name and atomically renamed; a version collision from a
+    travel work. Publish is optimistic-concurrency (``_publish_commit``):
+    the commit appears whole or not at all, and a version collision from a
     concurrent writer surfaces as an error instead of a lost update.
 
     Scale: the data write is a normal distributed ``df.write.parquet`` into
@@ -822,10 +762,9 @@ def commit_delta(
     on the driver (one entry per file, never per row).
 
     Orphan-file note: staged files are moved into the table dir BEFORE the
-    create-exclusive log publish (publishing first would require an empty
-    commit file on disk mid-write — a corrupt log to any concurrent
-    reader). A writer that loses the version race or crashes pre-publish
-    therefore leaves its moved files as unreferenced orphans; readers are
+    log publish (the commit names the moved files). A writer that loses
+    the version race or crashes pre-publish therefore leaves its moved
+    files as unreferenced orphans; readers are
     unaffected (the file list comes from the log) and a later
     ``vacuum_delta`` reclaims them — same trade-off as object-store Delta
     writers without a commit coordinator."""
@@ -997,7 +936,7 @@ def commit_delta(
     version = latest + 1
     # uuid-suffixed staging dir OWNED by this process: two writers racing
     # for the same version each stage into their own dir, so the commit
-    # race is decided solely by the O_CREAT|O_EXCL publish below — the
+    # race is decided solely by the exclusive publish below — the
     # loser can never rmtree the winner's in-flight staged files (which
     # would publish a commit with remove actions but missing adds).
     stage = table_dir / f"_staging_v{version}-{uuid.uuid4().hex}"
@@ -1024,21 +963,7 @@ def commit_delta(
             )
 
         now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    # callers label maintenance commits (OPTIMIZE/MERGE)
-                    # so DESCRIBE HISTORY reads like the real log
-                    "operation": operation,
-                    "operationParameters": {
-                        "mode": {"append": "Append", "overwrite": "Overwrite",
-                                 "replace": "Replace"}[mode]
-                    },
-                    "engineInfo": "evolution-spark-delta-writer/1.0",
-                }
-            }
-        ]
+        actions: list[dict] = []
         if txn is not None:
             # spec `txn` action: (appId, version) marks this commit as having
             # applied the app's batch `version` — the reader side of streaming
@@ -1094,7 +1019,12 @@ def commit_delta(
         if stage.exists():
             shutil.rmtree(stage)
 
-    _publish_commit(table_dir, version, actions, "write", config=config)
+    # callers label maintenance commits (OPTIMIZE/MERGE) via ``operation``
+    # so DESCRIBE HISTORY reads like the real log
+    mode_param = {"append": "Append", "overwrite": "Overwrite",
+                  "replace": "Replace"}[mode]
+    _publish_commit(table_dir, version, actions, operation,
+                    {"mode": mode_param}, now_ms=now_ms, config=config)
     return {"version": version, "files": n_files, "rows": total_rows}
 
 
@@ -1707,8 +1637,9 @@ def _collect_staged_adds(
     data_change: bool, spark=None,
 ) -> tuple[list[dict], int, int]:
     """Move a completed staged write's part files into the table dir and
-    return their add actions — shared by every commit that appends files
-    (commit_delta, update_delta_rows).
+    return their add actions — shared by every commit that adds files
+    (write_delta_snapshot's version 0, commit_delta, update_delta_rows,
+    the streaming sink).
 
     Vacuum-race guard: a commit stalled long enough for a concurrent
     reclaim_stale_staging to rmtree the staging dir must ABORT, not
@@ -2762,17 +2693,10 @@ def upgrade_delta_features(
             "minWriterVersion": 7,
             "writerFeatures": sorted(feats_w | legacy_w | want_w),
         }
-    now_ms = int(time.time() * 1000)
-    actions = [
-        {"commitInfo": {"timestamp": now_ms, "operation": "UPGRADE PROTOCOL",
-                        "operationParameters": {},
-                        "engineInfo": "evolution-spark-delta-writer/1.0"}},
-        {"protocol": new_proto},
-    ]
     version = latest + 1
-    _publish_commit(table_dir, version, actions, "feature upgrade",
-                    config=dict((repl_state.get("metadata") or {})
-                                .get("configuration") or {}))
+    config = (repl_state.get("metadata") or {}).get("configuration")
+    _publish_commit(table_dir, version, [{"protocol": new_proto}],
+                    "UPGRADE PROTOCOL", config=config)
     return {"version": version, "protocol": new_proto}
 
 
@@ -2825,8 +2749,7 @@ def _ict_enabled(config: dict | None) -> bool:
                ).lower() == "true"
 
 
-def _stamp_ict(table_dir: Path, version: int, actions: list[dict],
-               config: dict | None) -> list[dict]:
+def _next_ict(table_dir: Path, version: int, config: dict | None) -> int | None:
     """IN-COMMIT TIMESTAMPS (PROTOCOL.md, the v7 ``inCommitTimestamp``
     writer feature): when ``delta.enableInCommitTimestamps`` is set,
     every commit MUST carry ``commitInfo.inCommitTimestamp`` strictly
@@ -2834,9 +2757,9 @@ def _stamp_ict(table_dir: Path, version: int, actions: list[dict],
     clock skew in timestamp time travel. Monotonicity source: the
     previous commit's stamped value (one metadata-sized JSON read),
     falling back to the enablement-timestamp property when retention
-    truncated it."""
+    truncated it. None when the table does not enable the feature."""
     if not _ict_enabled(config):
-        return actions
+        return None
     prev = None
     # spec-conformant chains stamp EVERY commit, so version-1 resolves in
     # one read; walking further back only happens on foreign chains with
@@ -2861,36 +2784,42 @@ def _stamp_ict(table_dir: Path, version: int, actions: list[dict],
         prev = int((config or {}).get(
             "delta.inCommitTimestampEnablementTimestamp", 0
         ))
-    ict = max(int(time.time() * 1000), int(prev) + 1)
-    out = list(actions)
-    for i, a in enumerate(out):
-        if "commitInfo" in a:
-            out[i] = {"commitInfo": {**a["commitInfo"],
-                                     "inCommitTimestamp": ict}}
-            return out
-    return [{"commitInfo": {"timestamp": ict,
-                            "inCommitTimestamp": ict,
-                            "operation": "WRITE",
-                            "operationParameters": {}}}] + out
+    return max(int(time.time() * 1000), int(prev) + 1)
 
 
 def _publish_commit(table_dir: Path, version: int, actions: list[dict],
-                    what: str, config: dict | None = None):
-    """create-EXCLUSIVE commit publish shared by every single-commit DML
-    path — a same-version race is a hard error for the loser. ``config``
-    (the table's resolved configuration) lets the publisher honor
-    configuration-driven commit obligations (in-commit timestamps)."""
-    actions = _stamp_ict(table_dir, version, actions, config)
+                    operation: str, parameters: dict | None = None,
+                    now_ms: int | None = None, config: dict | None = None):
+    """Publish ``actions`` as ``_delta_log/<version>.json`` — the one
+    writer of every log version. Prepends the commit's single
+    ``commitInfo`` (``now_ms`` is the caller's clock, so its timestamp
+    equals the adds' modificationTime; ``config``, the table's resolved
+    configuration, decides the in-commit timestamp). The commit is
+    encoded and written to a unique temp name first, then hard-linked to
+    the version name: the version appears whole or not at all, and a
+    same-version race is a hard error for the loser."""
+    info = {
+        "timestamp": int(time.time() * 1000) if now_ms is None else now_ms,
+        "operation": operation,
+        "operationParameters": parameters or {},
+        "engineInfo": "evolution-spark-delta-writer/1.0",
+    }
+    ict = _next_ict(table_dir, version, config)
+    if ict is not None:
+        info["inCommitTimestamp"] = ict
+    body = "".join(json.dumps(a) + "\n" for a in [{"commitInfo": info}, *actions])
     commit = table_dir / "_delta_log" / f"{version:020d}.json"
+    tmp = commit.with_name(f".{commit.name}.{uuid.uuid4().hex}.tmp")
     try:
-        fd = os.open(commit, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        tmp.write_text(body)
+        os.link(tmp, commit)
     except FileExistsError:
         raise RuntimeError(
             f"concurrent commit detected: {commit} exists (retry the "
-            f"{what} against the new table state)"
+            f"{operation} against the new table state)"
         ) from None
-    with os.fdopen(fd, "w") as f:
-        f.write("".join(json.dumps(a) + "\n" for a in actions))
+    finally:
+        tmp.unlink(missing_ok=True)
 
 
 def delete_delta_rows(spark, path: str, predicate: str) -> dict:
@@ -2940,16 +2869,7 @@ def delete_delta_rows(spark, path: str, predicate: str) -> dict:
 
     now_ms = int(time.time() * 1000)
     version = latest + 1
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "DELETE",
-                "operationParameters": {"predicate": predicate},
-                "engineInfo": "evolution-spark-delta-writer/1.0",
-            }
-        }
-    ]
+    actions: list[dict] = []
     upgrade = _dv_protocol_upgrade(proto)
     if _cdf_enabled(config):
         # compose the two upgrades into ONE protocol action (replay keeps
@@ -2984,7 +2904,8 @@ def delete_delta_rows(spark, path: str, predicate: str) -> dict:
         actions.extend(_stage_cdc_actions(
             cdc_df, table_dir, version, schema_json, config, part_cols, now_ms
         ))
-    _publish_commit(table_dir, version, actions, "DELETE", config=config)
+    _publish_commit(table_dir, version, actions, "DELETE",
+                    {"predicate": predicate}, now_ms=now_ms, config=config)
     return {
         "version": version,
         "deleted_rows": deleted_rows,
@@ -3093,16 +3014,7 @@ def update_delta_rows(
 
     now_ms = int(time.time() * 1000)
     version = latest + 1
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "UPDATE",
-                "operationParameters": {"predicate": predicate},
-                "engineInfo": "evolution-spark-delta-writer/1.0",
-            }
-        }
-    ]
+    actions: list[dict] = []
     upgrade = _dv_protocol_upgrade(proto)
     if _cdf_enabled(config):
         cdf_up = _cdf_protocol_upgrade(
@@ -3161,7 +3073,8 @@ def update_delta_rows(
             shutil.rmtree(stage)
         if _cdf_enabled(config):
             matched.unpersist()
-    _publish_commit(table_dir, version, actions, "UPDATE", config=config)
+    _publish_commit(table_dir, version, actions, "UPDATE",
+                    {"predicate": predicate}, now_ms=now_ms, config=config)
     return {
         "version": version,
         "updated_rows": updated_rows,
@@ -3232,20 +3145,7 @@ def evolve_delta_schema(path: str, add_columns: list[tuple[str, object]]) -> dic
         metadata["configuration"] = {
             **config, "delta.columnMapping.maxColumnId": str(next_id),
         }
-    now_ms = int(time.time() * 1000)
-    actions = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "ADD COLUMNS",
-                "operationParameters": {
-                    "columns": json.dumps([n for n, _ in add_columns])
-                },
-                "engineInfo": "evolution-spark-delta-writer/1.0",
-            }
-        },
-        {"metaData": metadata},
-    ]
+    actions = [{"metaData": metadata}]
     # adding the first timestamp_ntz column to a v1 table activates the
     # timestampNtz feature in the same commit (spec activation rule)
     proto_now = repl_state.get("protocol") or dict(PROTOCOL)
@@ -3257,7 +3157,9 @@ def evolve_delta_schema(path: str, add_columns: list[tuple[str, object]]) -> dic
     if var_up:
         actions.append(var_up)
     version = latest + 1
-    _publish_commit(table_dir, version, actions, "evolution", config=config)
+    _publish_commit(table_dir, version, actions, "ADD COLUMNS",
+                    {"columns": json.dumps([n for n, _ in add_columns])},
+                    config=config)
     return {"version": version, "schema": [f.name for f in new_schema.fields]}
 
 
@@ -3984,27 +3886,17 @@ def upgrade_delta_to_column_mapping(path: str) -> dict:
         "delta.columnMapping.mode": "name",
         "delta.columnMapping.maxColumnId": str(counter[0]),
     }
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "SET TBLPROPERTIES",
-                "operationParameters": {
-                    "properties": json.dumps(
-                        {"delta.columnMapping.mode": "name"}
-                    )
-                },
-                "engineInfo": "evolution-spark-delta-writer/1.0",
-            }
-        }
-    ]
+    actions: list[dict] = []
     upgrade = _cm_protocol_upgrade(repl_state.get("protocol") or dict(PROTOCOL))
     if upgrade:
         actions.append(upgrade)
     actions.append({"metaData": metadata})
     version = latest + 1
-    _publish_commit(table_dir, version, actions, "mapping upgrade", config=config)
+    _publish_commit(
+        table_dir, version, actions, "SET TBLPROPERTIES",
+        {"properties": json.dumps({"delta.columnMapping.mode": "name"})},
+        config=config,
+    )
     return {"version": version, "mode": "name"}
 
 
@@ -4124,20 +4016,9 @@ def rename_delta_column(path: str, old: str, new: str) -> dict:
     metadata["schemaString"] = json.dumps(
         {"type": "struct", "fields": new_fields}
     )
-    now_ms = int(time.time() * 1000)
-    actions = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "RENAME COLUMN",
-                "operationParameters": {"from": old, "to": new},
-                "engineInfo": "evolution-spark-delta-writer/1.0",
-            }
-        },
-        {"metaData": metadata},
-    ]
     version = latest + 1
-    _publish_commit(table_dir, version, actions, "rename", config=config)
+    _publish_commit(table_dir, version, [{"metaData": metadata}],
+                    "RENAME COLUMN", {"from": old, "to": new}, config=config)
     return {"version": version, "schema": [f["name"] for f in new_fields]}
 
 
@@ -4180,20 +4061,10 @@ def drop_delta_column(path: str, name: str) -> dict:
     metadata["schemaString"] = json.dumps(
         {"type": "struct", "fields": new_fields}
     )
-    now_ms = int(time.time() * 1000)
-    actions = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "DROP COLUMNS",
-                "operationParameters": {"columns": json.dumps([name])},
-                "engineInfo": "evolution-spark-delta-writer/1.0",
-            }
-        },
-        {"metaData": metadata},
-    ]
     version = latest + 1
-    _publish_commit(table_dir, version, actions, "drop", config=config)
+    _publish_commit(table_dir, version, [{"metaData": metadata}],
+                    "DROP COLUMNS", {"columns": json.dumps([name])},
+                    config=config)
     return {"version": version, "schema": [f["name"] for f in new_fields]}
 
 
@@ -4233,20 +4104,9 @@ def clone_delta_table(
         )
     from urllib.parse import unquote
 
-    now_ms = int(time.time() * 1000)
     meta = dict(state["metadata"])
     meta["id"] = str(uuid.uuid4())
     actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "CLONE",
-                "operationParameters": {
-                    "source": str(src_dir),
-                    "sourceVersion": src_version,
-                },
-            }
-        },
         {"protocol": dict(state["protocol"])},
         {"metaData": meta},
     ]
@@ -4264,17 +4124,20 @@ def clone_delta_table(
                 pass
         actions.append({"add": add})
     log_dir = dest_dir / "_delta_log"
-    log_dir.mkdir(parents=True)
-    commit = log_dir / f"{0:020d}.json"
-    tmp = log_dir / f".{0:020d}.json.tmp"
-    tmp.write_text("".join(json.dumps(a) + "\n" for a in actions))
-    os.replace(tmp, commit)  # atomic publish
+    log_dir.mkdir(parents=True, exist_ok=True)
+    # the copied configuration carries the source's commit obligations
+    # (in-commit timestamps) over to the clone's own history
+    _publish_commit(
+        dest_dir, 0, actions, "CLONE",
+        {"source": str(src_dir), "sourceVersion": src_version},
+        config=meta.get("configuration"),
+    )
     return {
         "version": 0,
         "files": len(live),
         "rows": total_rows,
         "source_version": src_version,
-        "path": str(commit),
+        "path": str(log_dir / f"{0:020d}.json"),
     }
 
 
@@ -4337,16 +4200,7 @@ def restore_delta_table(path: str, version: int) -> dict:
             + ("..." if len(missing) > 5 else "")
         )
     now_ms = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "RESTORE",
-                "operationParameters": {"version": str(version)},
-                "engineInfo": "evolution-spark-delta-writer/1.0",
-            }
-        }
-    ]
+    actions: list[dict] = []
     old_meta = (old_state.get("metadata") or {})
     cur_meta = (repl_state.get("metadata") or {})
     if old_meta != cur_meta:
@@ -4367,7 +4221,8 @@ def restore_delta_table(path: str, version: int) -> dict:
         add["dataChange"] = True
         actions.append({"add": add})
     new_version = latest + 1
-    _publish_commit(table_dir, new_version, actions, "RESTORE", config=config)
+    _publish_commit(table_dir, new_version, actions, "RESTORE",
+                    {"version": str(version)}, now_ms=now_ms, config=config)
     return {
         "version": new_version,
         "restored_to": version,
@@ -4846,22 +4701,9 @@ def ensure_row_tracking_materialized(path: str) -> tuple[str, str]:
     metadata["configuration"] = {
         **config, _RT_ID_KEY: id_name, _RT_VER_KEY: ver_name,
     }
-    now_ms = int(time.time() * 1000)
-    actions = [
-        {"commitInfo": {
-            "timestamp": now_ms,
-            "operation": "SET TBLPROPERTIES",
-            "operationParameters": {
-                "properties": json.dumps(
-                    {_RT_ID_KEY: id_name, _RT_VER_KEY: ver_name}
-                )
-            },
-            "engineInfo": "evolution-spark-delta-writer/1.0",
-        }},
-        {"metaData": metadata},
-    ]
     _publish_commit(
-        table_dir, latest + 1, actions, "row-tracking materialization",
+        table_dir, latest + 1, [{"metaData": metadata}], "SET TBLPROPERTIES",
+        {"properties": json.dumps({_RT_ID_KEY: id_name, _RT_VER_KEY: ver_name})},
         config=metadata["configuration"],
     )
     return id_name, ver_name
@@ -5015,17 +4857,7 @@ def add_delta_constraint(spark, path: str, name: str, expr: str) -> dict:
         )
     metadata = dict(repl_state["metadata"])
     metadata["configuration"] = {**config, key: expr}
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "ADD CONSTRAINT",
-                "operationParameters": {"name": name, "expr": expr},
-                "engineInfo": "evolution-spark-delta-writer/1.0",
-            }
-        }
-    ]
+    actions: list[dict] = []
     v_w = int(proto.get("minWriterVersion", 2))
     feats_w = set(proto.get("writerFeatures") or [])
     if not (v_w >= 7 and "checkConstraints" in feats_w) and v_w != 3:
@@ -5041,7 +4873,8 @@ def add_delta_constraint(spark, path: str, name: str, expr: str) -> dict:
         }})
     actions.append({"metaData": metadata})
     version = latest + 1
-    _publish_commit(table_dir, version, actions, "ADD CONSTRAINT", config=config)
+    _publish_commit(table_dir, version, actions, "ADD CONSTRAINT",
+                    {"name": name, "expr": expr}, config=config)
     return {"version": version, "name": name, "expr": expr}
 
 
@@ -5063,20 +4896,9 @@ def drop_delta_constraint(path: str, name: str) -> dict:
     metadata["configuration"] = {
         k: v for k, v in config.items() if k != key
     }
-    now_ms = int(time.time() * 1000)
-    actions = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "DROP CONSTRAINT",
-                "operationParameters": {"name": name},
-                "engineInfo": "evolution-spark-delta-writer/1.0",
-            }
-        },
-        {"metaData": metadata},
-    ]
     version = latest + 1
-    _publish_commit(table_dir, version, actions, "DROP CONSTRAINT", config=config)
+    _publish_commit(table_dir, version, [{"metaData": metadata}],
+                    "DROP CONSTRAINT", {"name": name}, config=config)
     return {"version": version, "name": name}
 
 

@@ -860,8 +860,9 @@ def _commit_shards(
     writer_renames=None,
 ) -> None:
     """DRIVER-side commit: hand the staged shards to the native log commit
-    as one atomic version (create-exclusive publish). ``txn`` carries the
-    streaming (appId, batchId) pair for exactly-once replay skipping."""
+    as one atomic, exclusive version (``_publish_commit``). ``txn``
+    carries the streaming (appId, batchId) pair for exactly-once replay
+    skipping."""
     import shutil as _shutil
 
     from evolution_spark.io.delta_log import (
@@ -977,16 +978,7 @@ def _commit_shards(
 
     version = latest + 1
     now_ms = int(_time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "STREAMING UPDATE" if txn else "WRITE",
-                "operationParameters": {},
-                "engineInfo": "evolution-spark-delta-writer/1.0",
-            }
-        }
-    ]
+    actions: list[dict] = []
     if txn is not None:
         actions.append({"txn": {"appId": txn[0], "version": txn[1]}})
     # move shards under a commit-owned staging dir so _collect_staged_adds
@@ -1007,8 +999,9 @@ def _commit_shards(
             _shutil.rmtree(stage)
     if not add_actions:
         return
-    _publish_commit(table_dir, version, actions, "sink append",
-                    config=config)
+    _publish_commit(table_dir, version, actions,
+                    "STREAMING UPDATE" if txn else "WRITE",
+                    now_ms=now_ms, config=config)
 
 
 def _reclaim_stages(messages, fallback_stage: str) -> None:

@@ -443,11 +443,8 @@ def encode_flf(
     jvm_shortest = float_format == "plain" and _jvm_emits_shortest(df.sparkSession)
     pieces: list[Column] = []
     cursor = 0
+    # FixedSchema refuses overlapping columns at construction
     for c in sorted(schema.columns, key=lambda c: c.offset):
-        if c.offset < cursor:
-            raise ValueError(
-                f"overlapping columns at offset {c.offset} (column {c.name!r})"
-            )
         if c.offset > cursor:
             pieces.append(F.lit(" " * (c.offset - cursor)))
         pieces.append(

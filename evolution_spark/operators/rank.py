@@ -88,108 +88,6 @@ def ntile_from_rank(rank: Column, n_rows: Column, k: int) -> Column:
     ).otherwise(rem + F.floor((rank - 1 - big) / q) + 1).cast("int")
 
 
-def grouped_exact_percentiles(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    percentages: list[float],
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """Exact interpolated percentiles per group WITHOUT buffering any
-    group's values in one task — the distributed replacement for
-    ``F.percentile(value_col, array(...))``, whose aggregation buffer
-    holds every (value, count) pair of a group in a single reducer (the
-    §5 memory shape that breaks on a 100 TB group).
-
-    Returns one row per (group, percentage): ``(*group_cols, __p,
-    __value)``, where ``__value`` is BIT-IDENTICAL to Spark's
-    ``Percentile`` expression. That expression computes (Percentile.scala,
-    ``generateOutput``/``getPercentile``):
-
-        position = (count - 1) * percentage            // Long * Double
-        lower    = floor(position); higher = ceil(position)
-        if lower == higher:          sorted(lower)
-        elif key(higher)==key(lower): key(lower)       // skip interpolation
-        else: (higher - position) * key(lower) + (position - lower) * key(higher)
-
-    replicated here term-for-term in Spark SQL double arithmetic (same
-    IEEE ops in the same order — the equal-key shortcut matters because
-    ``a*k + b*k`` with a+b==1 is NOT exactly ``k`` in floating point).
-    The sorted-position lookup runs on the exact distributed global rank
-    (``with_global_rank``: range exchange + per-partition offsets);
-    duplicate values make the rank among equals placement-arbitrary, but
-    the VALUE at any rank is the multiset order statistic — deterministic
-    regardless of tie placement, so the percentile is too.
-
-    Matches ``F.percentile`` null semantics (null values ignored, count
-    excludes them). Groups whose values are ALL null are absent from the
-    output (callers needing them re-attach with a left join); Spark's
-    aggregate would return NULL for such groups.
-    """
-    vals = df.select(*group_cols, value_col).where(F.col(value_col).isNotNull())
-    ranked = with_global_rank(
-        vals, [*group_cols, value_col], rank_col="__r",
-        n_partitions=n_partitions,
-    )
-    # per-group [min rank, count]: one map-side-combined aggregation, one
-    # row per group — metadata-sized
-    bounds = ranked.groupBy(*group_cols).agg(
-        F.min("__r").alias("__r0"), F.count(F.lit(1)).alias("__n")
-    )
-    needed = (
-        bounds.select(
-            *group_cols, "__r0",
-            F.explode(
-                F.array(*[F.lit(float(p)) for p in percentages])
-            ).alias("__p"),
-            "__n",
-        )
-        # (count - 1) * percentage exactly as Percentile.generateOutput
-        # (bigint - 1) * double promotes to double: one IEEE multiply
-        .withColumn("__pos", (F.col("__n") - F.lit(1)) * F.col("__p"))
-        .withColumn("__lo", F.floor("__pos"))
-        .withColumn("__hi", F.ceil("__pos"))
-    )
-    # the two global ranks each (group, p) needs, as an equi-joinable
-    # (rank -> role) list: 2 rows per (group, percentage) — tiny, broadcast
-    marks = needed.select(
-        *group_cols, "__p", "__pos", "__lo", "__hi",
-        F.explode(
-            F.array(
-                F.struct(
-                    (F.col("__r0") + F.col("__lo")).alias("__r"),
-                    F.lit("lo").alias("__which"),
-                ),
-                F.struct(
-                    (F.col("__r0") + F.col("__hi")).alias("__r"),
-                    F.lit("hi").alias("__which"),
-                ),
-            )
-        ).alias("__m"),
-    ).select(
-        *group_cols, "__p", "__pos", "__lo", "__hi",
-        F.col("__m.__r").alias("__r"), F.col("__m.__which").alias("__which"),
-    )
-    hits = ranked.select("__r", F.col(value_col).alias("__v")).join(
-        F.broadcast(marks), "__r"
-    )
-    per = hits.groupBy(*group_cols, "__p", "__pos", "__lo", "__hi").agg(
-        F.max(F.when(F.col("__which") == "lo", F.col("__v"))).alias("__vlo"),
-        F.max(F.when(F.col("__which") == "hi", F.col("__v"))).alias("__vhi"),
-    )
-    vlo = F.col("__vlo").cast("double")
-    vhi = F.col("__vhi").cast("double")
-    interp = (F.col("__hi") - F.col("__pos")) * vlo + (
-        F.col("__pos") - F.col("__lo")
-    ) * vhi
-    value = (
-        F.when(F.col("__lo") == F.col("__hi"), vlo)
-        .when(vhi == vlo, vlo)
-        .otherwise(interp)
-    )
-    return per.select(*group_cols, "__p", value.alias("__value"))
-
-
 def global_running_sum(
     df: DataFrame,
     order_cols: list[str],

@@ -215,16 +215,7 @@ def percentile_exact(spark, sf_dir):
     """Exact interpolated percentiles: Spark ``percentile`` and DuckDB
     ``quantile_cont`` implement the same linear interpolation over the sorted
     values — verified bit-exact. (The sketch-based one-pass path for 100 TB
-    is ``approx_percentile_prices``.)
-
-    r16 note: a sort-based distributed rewrite
-    (operators/rank.grouped_exact_percentiles — bit-identical, tested)
-    exists for groups too large for the builtin's per-group (value, count)
-    aggregation buffer, but it is >= 2 full passes by construction and
-    measured 1.9x SLOWER than this one-pass aggregate at sf0.1/32c
-    (builtin 1.38 s vs 2.60 s rewrite, interleaved min-of-4), so the
-    declared query stays on the builtin; at 100 TB per-group-distinct
-    scale, switch callers to the operator."""
+    is ``approx_percentile_prices``.)"""
     l = table(spark, sf_dir, "lineitem")
     # One percentile buffer for all three quantiles (array form) instead of
     # three independent full-copy accumulations of the same column.

@@ -1788,3 +1788,58 @@ def test_table_health_advisor(spark, tmp_path):
 
     with pytest.raises(FileNotFoundError):
         table_health(str(tmp_path / "nope"))
+
+
+@pytest.fixture(scope="module")
+def small_flf(spark, tmp_path_factory):
+    """One 40-row mocked FLF input shared by the save-mode matrix."""
+    flf = str(tmp_path_factory.mktemp("savemode") / "in.flf")
+    Mocker(SCHEMA, 40, flf, seed=5).run(spark)
+    return flf
+
+
+# (existing output, save_mode) -> (latest version, rows) read back, or
+# ValueError; "untouched" = the plain-Parquet dir is left as it was
+_DELTA_SAVE_MODES = {
+    ("absent", "error"): (0, 40),
+    ("absent", "append"): (0, 40),
+    ("absent", "overwrite"): (0, 40),
+    ("absent", "ignore"): (0, 40),
+    ("parquet", "error"): ValueError,
+    ("parquet", "append"): ValueError,
+    ("parquet", "overwrite"): (0, 40),
+    ("parquet", "ignore"): "untouched",
+    ("delta", "error"): ValueError,
+    ("delta", "append"): (1, 80),
+    ("delta", "overwrite"): (1, 40),
+    ("delta", "ignore"): (0, 40),
+}
+
+
+@pytest.mark.parametrize("existing,save_mode", sorted(_DELTA_SAVE_MODES))
+def test_converter_delta_save_modes(spark, tmp_path, small_flf, existing, save_mode):
+    """Every save_mode against an absent path, a plain-Parquet dir and a
+    Delta table: what the Converter's Delta target raises or commits."""
+    from pathlib import Path
+
+    from evolution_spark.io.delta_log import _log_versions, read_delta_snapshot
+
+    out = str(tmp_path / "out")
+    if existing == "parquet":
+        spark.range(3).write.parquet(out)
+    elif existing == "delta":
+        Converter(small_flf, SCHEMA, out, target=Target.DELTA).run(spark)
+    conv = Converter(small_flf, SCHEMA, out, target=Target.DELTA, save_mode=save_mode)
+    want = _DELTA_SAVE_MODES[(existing, save_mode)]
+    if want is ValueError:
+        with pytest.raises(ValueError, match="exists"):
+            conv.run(spark)
+        return
+    conv.run(spark)
+    if want == "untouched":
+        assert not (Path(out) / "_delta_log").exists()
+        assert spark.read.parquet(out).count() == 3
+        return
+    version, rows = want
+    assert _log_versions(Path(out) / "_delta_log")[-1] == version
+    assert read_delta_snapshot(spark, out).count() == rows

@@ -1262,3 +1262,28 @@ def test_row_tracking_mark_survives_tombstone_and_checkpoint(spark, tmp_path):
                    for v, a in _rt_adds(t) if "baseRowId" in a)
     for (s1, e1), (s2, e2) in zip(spans, spans[1:]):
         assert s2 > e1  # no overlapping id ranges anywhere
+
+
+def test_clone_of_ict_table_stamps_v0_and_appends(spark, tmp_path):
+    """A clone copies the source's enableInCommitTimestamps configuration,
+    so its own v0 and every later commit must carry a strictly
+    increasing commitInfo.inCommitTimestamp."""
+    from evolution_spark.io.delta_log import clone_delta_table
+
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    write_delta_snapshot(
+        spark.range(3).select("id"), str(src),
+        configuration={"delta.enableInCommitTimestamps": "true"},
+    )
+    clone_delta_table(str(src), str(dst))
+    commit_delta(spark.range(3, 5).select("id"), str(dst), mode="append")
+
+    def ict(v):
+        for ln in (dst / "_delta_log" / f"{v:020d}.json").read_text().splitlines():
+            a = json.loads(ln)
+            if "commitInfo" in a:
+                return a["commitInfo"].get("inCommitTimestamp")
+
+    assert ict(0) is not None
+    assert ict(1) is not None and ict(1) > ict(0)
+    assert read_delta_snapshot(spark, str(dst)).count() == 5

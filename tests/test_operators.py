@@ -1721,52 +1721,3 @@ def test_global_running_sum_with_rank_matches_stacked_ops(spark):
             ).collect()
         }
         assert fused == stacked, f"n_partitions={n}"
-
-
-def test_grouped_exact_percentiles_bitexact_vs_spark(spark):
-    """grouped_exact_percentiles must be BIT-identical to F.percentile —
-    the percentile_exact query's oracle hash depends on it. Adversarial
-    fixture: duplicate values (exercises the equal-key shortcut, where
-    naive interpolation a*k+b*k != k in floating point), single- and
-    two-element groups, negative values, huge/tiny magnitudes, nulls
-    (ignored by Spark), odd/even counts, several partition counts."""
-    import random
-
-    from evolution_spark.operators.rank import grouped_exact_percentiles
-
-    rng = random.Random(42)
-    rows = []
-    # group a: many duplicates around the interpolation boundaries
-    rows += [("a", float(v)) for v in [1, 1, 1, 2, 2, 3, 3, 3, 3, 7]]
-    # group b: single element; group c: two elements (pure interpolation)
-    rows += [("b", 41.5), ("c", -3.25), ("c", 9.75)]
-    # group d: random doubles with repeats and nulls
-    pool = [rng.uniform(-1e6, 1e6) for _ in range(40)]
-    rows += [("d", rng.choice(pool)) for _ in range(400)]
-    rows += [("d", None)] * 7
-    # group e: extreme magnitudes
-    rows += [("e", v) for v in (1e300, -1e300, 1e-300, 0.0, 2.5e299)]
-    # group f: all equal (interpolation shortcut on every percentile)
-    rows += [("f", 123.456)] * 9
-    rng.shuffle(rows)
-    df = spark.createDataFrame(rows, "g string, v double")
-
-    ps = [0.0, 0.25, 0.5, 0.61803, 0.95, 1.0]
-    expected = {
-        r.g: r.exp
-        for r in df.groupBy("g").agg(
-            F.percentile("v", F.array(*[F.lit(p) for p in ps])).alias("exp")
-        ).collect()
-    }
-    for n in (1, 4, 16):
-        got: dict[str, dict[float, float]] = {}
-        for r in grouped_exact_percentiles(
-            df, ["g"], "v", ps, n_partitions=n
-        ).collect():
-            got.setdefault(r.g, {})[r["__p"]] = r["__value"]
-        assert set(got) == set(expected), f"n={n}"
-        for g, exp_arr in expected.items():
-            for p, exp in zip(ps, exp_arr):
-                assert got[g][p] == exp, (
-                    f"n={n} g={g} p={p}: {got[g][p]!r} != {exp!r}"
-                )
