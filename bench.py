@@ -1,6 +1,6 @@
 """Benchmark harness: runs the engine's headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS, else the host's CPUs] and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query is forced end-to-end with the noop sink (full computation, no
@@ -368,13 +368,12 @@ NOT_BENCHED = frozenset([
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from evolution_spark.session import get_spark
+    from evolution_spark.session import _host_size, get_spark
 
-    spark = get_spark(app_name="evolution-spark-bench", master=f"local[{cpus}]",
-                      shuffle_partitions=cpus)
+    cpus, _ = _host_size()
+    spark = get_spark(app_name="evolution-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     from evolution_spark.queries import QUERIES

@@ -533,44 +533,47 @@ def write_delta_snapshot(
         }
 
     table_dir.mkdir(parents=True)
-    stage = table_dir / f"_staging_v0-{uuid.uuid4().hex}"
-    writer = df.write.mode("error")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
     try:
+        stage = table_dir / f"_staging_v0-{uuid.uuid4().hex}"
+        writer = df.write.mode("error")
+        if part_cols:
+            writer = writer.partitionBy(*part_cols)
         writer.parquet(str(stage))
         now_ms = int(time.time() * 1000)
         add_actions, n_files, total_rows = _collect_staged_adds(
             stage, table_dir, 0, now_ms, data_change=True,
             spark=df.sparkSession,
         )
-    finally:
-        if stage.exists():
-            shutil.rmtree(stage)
+        shutil.rmtree(stage)
 
-    actions: list[dict] = []
-    if txn is not None:
-        actions.append({"txn": {"appId": txn[0], "version": txn[1]}})
-    actions.append({"protocol": protocol})
-    actions.append(
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "name": name,
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": schema_string,
-                "partitionColumns": part_cols,
-                "configuration": config,
-                "createdTime": now_ms,
+        actions: list[dict] = []
+        if txn is not None:
+            actions.append({"txn": {"appId": txn[0], "version": txn[1]}})
+        actions.append({"protocol": protocol})
+        actions.append(
+            {
+                "metaData": {
+                    "id": str(uuid.uuid4()),
+                    "name": name,
+                    "format": {"provider": "parquet", "options": {}},
+                    "schemaString": schema_string,
+                    "partitionColumns": part_cols,
+                    "configuration": config,
+                    "createdTime": now_ms,
+                }
             }
-        }
-    )
-    actions.extend(add_actions)
-    (table_dir / "_delta_log").mkdir()
-    # creation-time in-commit-timestamp enablement: the publisher stamps
-    # v0 itself (spec: every commit after enablement)
-    _publish_commit(table_dir, 0, actions, "WRITE", {"mode": "ErrorIfExists"},
-                    now_ms=now_ms, config=config)
+        )
+        actions.extend(add_actions)
+        (table_dir / "_delta_log").mkdir()
+        # creation-time in-commit-timestamp enablement: the publisher stamps
+        # v0 itself (spec: every commit after enablement)
+        _publish_commit(table_dir, 0, actions, "WRITE", {"mode": "ErrorIfExists"},
+                        now_ms=now_ms, config=config)
+    except BaseException:
+        # the mkdir above is exclusive, so the dir is this call's own: left
+        # behind, it would refuse every retry as "Delta table dir exists"
+        shutil.rmtree(table_dir, ignore_errors=True)
+        raise
     return {"version": 0, "files": n_files, "rows": total_rows,
             "path": str(table_dir / "_delta_log" / f"{0:020d}.json")}
 

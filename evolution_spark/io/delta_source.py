@@ -975,6 +975,7 @@ def _commit_shards(
             f"{current_renames}) — rerun the write"
         )
     import time as _time
+    import uuid as _uuid
 
     version = latest + 1
     now_ms = int(_time.time() * 1000)
@@ -982,9 +983,11 @@ def _commit_shards(
     if txn is not None:
         actions.append({"txn": {"appId": txn[0], "version": txn[1]}})
     # move shards under a commit-owned staging dir so _collect_staged_adds
-    # (vacuum-race guard + stats + version-unique names) applies unchanged
-    stage = table_dir / f"_staging_v{version}-sink"
-    stage.mkdir(parents=True, exist_ok=True)
+    # (vacuum-race guard + stats + version-unique names) applies unchanged;
+    # uuid-suffixed like commit_delta's, so a commit racing for the same
+    # version can neither publish nor rmtree this one's shards
+    stage = table_dir / f"_staging_v{version}-sink-{_uuid.uuid4().hex}"
+    stage.mkdir()
     import os as _os
 
     try:

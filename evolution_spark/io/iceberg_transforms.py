@@ -407,13 +407,15 @@ def with_transform_column(df, out_name: str, transform: str,
         (f"{t}_f4", mul32(f"{t}_f3", 0xC2B2AE35)),
         (f"{t}_f5", f"({t}_f4 ^ shiftright({t}_f4, 16))"),
         (
-            out_name,
+            f"{t}_out",
             f"CASE WHEN {qc} IS NULL THEN CAST(NULL AS INT) ELSE "
             f"CAST(pmod(({t}_f5 & {0x7FFFFFFF}), {n}) AS INT) END",
         ),
     ]
-    df = df.selectExpr("*", *[f"{sql} AS {quote_ident(name)}" for name, sql in stages])
-    return df.drop(*[name for name, _ in stages[:-1]])
+    df = df.selectExpr("*", *[f"{sql} AS {name}" for name, sql in stages])
+    # withColumn, not a final alias: an existing out_name is replaced in
+    # place, as in the unstaged lane, instead of duplicated
+    return df.withColumn(out_name, F.col(f"{t}_out")).drop(*[name for name, _ in stages])
 
 
 def _bucket_int_expr(c, source_type: str, n: int):

@@ -553,8 +553,9 @@ def read_warc(spark: SparkSession, paths: list[str],
                   // records_per_partition)
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import sys
+        import logging
 
+        log = logging.getLogger(__name__)
         for pdf in batches:
             rows = []
             handles = {}
@@ -614,8 +615,8 @@ def read_warc(spark: SparkSession, paths: list[str],
                 for f in handles.values():
                     f.close()
             for p, n_skip in skipped_by_file.items():
-                print(f"read_warc: skipped {n_skip} corrupt "
-                      f"record(s)/unit(s) in {p}", file=sys.stderr)
+                log.warning("read_warc: skipped %d corrupt record(s)/unit(s) "
+                            "in %s", n_skip, p)
             yield pd.DataFrame(rows, columns=[
                 "file", "offset", "warc_type", "record_id", "uri",
                 "date", "content_type", "http_status", "payload",

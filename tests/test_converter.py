@@ -1843,3 +1843,24 @@ def test_converter_delta_save_modes(spark, tmp_path, small_flf, existing, save_m
     version, rows = want
     assert _log_versions(Path(out) / "_delta_log")[-1] == version
     assert read_delta_snapshot(spark, out).count() == rows
+
+
+@pytest.mark.parametrize("save_mode", ["error", "append"])
+def test_failed_delta_v0_leaves_no_table_dir(spark, tmp_path, small_flf, save_mode):
+    """An abort-mode parse error while writing version 0 removes the table
+    dir it made, so the retry on good input is not refused as existing."""
+    from pyspark.errors import PySparkException
+
+    from evolution_spark.io.delta_log import read_delta_snapshot
+
+    bad = tmp_path / "bad.flf"
+    bad.write_text("___ab____" + "1.5*****************" + ";" * 30 + "000true0" + "\n")
+    out = tmp_path / "nested" / "out"
+    with pytest.raises(PySparkException, match="cool"):
+        Converter(str(bad), SCHEMA, str(out), target=Target.DELTA,
+                  save_mode=save_mode).run(spark)
+    assert not out.exists()
+    Converter(small_flf, SCHEMA, str(out), target=Target.DELTA,
+              save_mode=save_mode).run(spark)
+    assert read_delta_snapshot(spark, str(out)).count() == 40
+    assert not any(p.name.startswith("_staging") for p in out.iterdir())

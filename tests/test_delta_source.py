@@ -516,6 +516,29 @@ def test_batch_write_append(registered, tmp_path):
         ).mode("overwrite").save(path)
 
 
+def test_sink_commit_owns_its_staging_dir(registered, tmp_path):
+    """Another committer's shards, staged for the same version, are
+    neither published nor deleted by this sink's commit."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from evolution_spark.io.delta_log import read_delta_snapshot, write_delta_snapshot
+
+    spark = registered
+    path = tmp_path / "wsink"
+    write_delta_snapshot(spark.range(5).select(F.col("id").alias("k")), str(path))
+    foreign = [path / "_staging_v1-sink" / "foreign.parquet",
+               path / f"_staging_v1-sink-{'0' * 32}" / "foreign.parquet"]
+    for f in foreign:
+        f.parent.mkdir()
+        pq.write_table(pa.table({"k": pa.array([100, 101], pa.int64())}), f)
+    spark.range(5, 9).select(F.col("id").alias("k")).write.format(
+        "evolution_delta"
+    ).mode("append").save(str(path))
+    assert sorted(r.k for r in read_delta_snapshot(spark, str(path)).collect()) == list(range(9))
+    assert all(f.exists() for f in foreign)
+
+
 def test_streaming_sink_exactly_once(registered, tmp_path):
     """The format-level streaming sink: each micro-batch is ONE Delta
     version carrying a txn action; a replayed batchId is skipped."""

@@ -375,6 +375,23 @@ def _same_value(got, want, dtype) -> bool:
     return got == want and type(got) is type(want)
 
 
+def _assert_matches_reference(parse, lines, schema, mode):
+    """``parse()`` (a DataFrame) agrees with ``ref_parse(lines)``: the same
+    values, or an abort whose message holds the reference's."""
+    want = ref_parse(lines, schema, mode)
+    try:
+        got = [tuple(r) for r in parse().collect()]
+    except PySparkException as e:
+        assert isinstance(want, str), f"unexpected abort: {e}"
+        assert want in str(e)
+        return
+    assert not isinstance(want, str), f"expected abort: {want}"
+    assert len(got) == len(want)
+    for g_row, w_row in zip(got, want):
+        for c, g, w in zip(schema.columns, g_row, w_row):
+            assert _same_value(g, w, c.dtype), (c, g, w, lines)
+
+
 _PADS = ["Whitespace", "Zero", "Five", "Backslash", "Underscore", "Asterisk"]
 _NAMES = ["id", "a`b", "c-d", "e'f", "g h", "x\\y"]
 _TOKENS = [
@@ -459,18 +476,7 @@ def test_parse_matches_reference_parser(spark, batch):
     example. (Lines never hold CR/LF: a text source splits on them.)"""
     schema, lines, mode = batch
     df = spark.createDataFrame([(l,) for l in lines], "value string").coalesce(1)
-    want = ref_parse(lines, schema, mode)
-    try:
-        got = [tuple(r) for r in parse_flf(df, schema, mode=mode).collect()]
-    except PySparkException as e:
-        assert isinstance(want, str), f"unexpected abort: {e}"
-        assert want in str(e)
-        return
-    assert not isinstance(want, str), f"expected abort: {want}"
-    assert len(got) == len(want)
-    for g_row, w_row in zip(got, want):
-        for c, g, w in zip(schema.columns, g_row, w_row):
-            assert _same_value(g, w, c.dtype), (c, g, w, lines)
+    _assert_matches_reference(lambda: parse_flf(df, schema, mode=mode), lines, schema, mode)
 
 
 def test_validate_matches_reference_parser(spark, tmp_path):
@@ -512,3 +518,35 @@ def test_validate_matches_reference_parser(spark, tmp_path):
     assert want  # the seed plants defects
     got = Converter(str(path), sch, "unused").validate(spark, sample_rows=10_000).collect()
     assert sorted(tuple(r) for r in got) == want
+
+
+def _file_lines(seed: int, n: int):
+    """``n`` EDGE rows: valid values, with ~30% of fields swapped for
+    adversarial tokens (cut to the field width)."""
+    rng = random.Random(seed)
+    valid = {"Utf8": "Åström実", "Int64": "-123", "Int32": "42",
+             "Boolean": "true", "Float64": "2.5"}
+    return ["".join(
+        _padded(rng.choice(_TOKENS) if rng.random() < 0.3 else valid[c.dtype], c)[:c.length]
+        for c in EDGE.columns
+    ) for _ in range(n)]
+
+
+@pytest.mark.parametrize("mode", ["permissive", "abort"])
+@pytest.mark.parametrize("form", ["mixed_crlf_lf", "no_final_newline", "empty", "gzip"])
+def test_file_forms_match_reference_parser(spark, tmp_path, form, mode):
+    """Whole files through ``read_flf`` agree with the reference parser on
+    the file's lines: CRLF and LF terminators mixed in one file, a last
+    line without a terminator, an empty file and ``.gz`` input."""
+    import gzip
+
+    rng = random.Random(7)
+    lines = [] if form == "empty" else _file_lines(20261019, 60)
+    text = "".join(l + rng.choice(["\r\n", "\n"]) for l in lines)
+    if form == "no_final_newline":
+        text = text.rstrip("\r\n")
+    data = text.encode("utf-8")
+    path = tmp_path / ("in.flf.gz" if form == "gzip" else "in.flf")
+    path.write_bytes(gzip.compress(data) if form == "gzip" else data)
+    _assert_matches_reference(lambda: read_flf(spark, str(path), EDGE, mode=mode),
+                              lines, EDGE, mode)

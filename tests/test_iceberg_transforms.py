@@ -483,3 +483,19 @@ def test_staged_bucket_lane_quotes_odd_names(spark):
     exp = [None if v is None else (bucket_hash(v, "long") & 0x7FFFFFFF) % 16
            for v in (34, -3, None)]
     assert got == exp
+
+
+def test_staged_bucket_lane_replaces_existing_out_name(spark):
+    """An ``out_name`` column already in the frame is replaced in place,
+    as ``withColumn`` does, not duplicated."""
+    from evolution_spark.io.iceberg_transforms import bucket_hash, with_transform_column
+
+    df = spark.createDataFrame([(34, "x", 1), (-3, "y", 2)], "k long, b string, z int")
+    out = with_transform_column(df, "b", "bucket[16]", "k", "long")
+    assert out.columns == ["k", "b", "z"]
+    assert dict(out.dtypes)["b"] == "int"
+    assert [r.b for r in out.collect()] == [
+        (bucket_hash(v, "long") & 0x7FFFFFFF) % 16 for v in (34, -3)
+    ]
+    # the source column itself as the output
+    assert with_transform_column(df, "k", "bucket[16]", "k", "long").columns == ["k", "b", "z"]

@@ -30,13 +30,11 @@ def main() -> int:
 
     sf_dir = args.sf or os.environ.get("SPARK_GRAFT_SF_DIR",
                                        "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from evolution_spark.queries import QUERIES
     from evolution_spark.session import get_spark
 
-    spark = get_spark(app_name="evolution-spark-qtime",
-                      master=f"local[{cpus}]", shuffle_partitions=cpus)
+    spark = get_spark(app_name="evolution-spark-qtime")
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 

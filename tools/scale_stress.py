@@ -1162,9 +1162,7 @@ def main() -> int:
 
     from evolution_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app_name="evolution-scale-stress", master=f"local[{cpus}]",
-                      shuffle_partitions=cpus)
+    spark = get_spark(app_name="evolution-scale-stress")
     spark.sparkContext.setLogLevel("ERROR")
 
     from evolution_spark.queries import QUERIES
