@@ -46,6 +46,8 @@ from urllib.parse import quote
 
 from pyspark.sql import DataFrame
 
+from evolution_spark.io.scan_filters import parquet_files
+
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 
 # Reader capabilities this module actually implements. We reconstruct
@@ -439,8 +441,11 @@ def write_delta_snapshot(
     """Write ``df`` as a version-0 Delta table at ``path``.
 
     ``mode``: ``error`` refuses an existing table dir; ``overwrite``
-    replaces it (fresh snapshot — still one commit). Returns the commit
-    summary (version, file count, row count) for logging/tests.
+    replaces it (fresh snapshot — still one commit). The replacement is
+    written beside the old dir and swapped in only once it is published,
+    so a failed write (say an abort-mode parse error) leaves the old table
+    as it was. Returns the commit summary (version, file count, row count)
+    for logging/tests.
 
     ``column_mapping=True`` creates the table in NAME mapping mode (the
     Databricks default after any RENAME/DROP COLUMN): every field gets a
@@ -451,12 +456,11 @@ def write_delta_snapshot(
     commits later. Partitioned mapped tables follow the spec layout:
     directory names AND ``partitionColumns`` AND ``partitionValues`` all
     use the PHYSICAL partition column name."""
-    table_dir = Path(path)
+    table_dir = replaced = Path(path)
     if table_dir.exists():
-        if mode == "overwrite":
-            shutil.rmtree(table_dir)
-        else:
+        if mode != "overwrite":
             raise ValueError(f"Delta table dir exists: {path} (mode={mode})")
+        table_dir = replaced.with_name(f".{replaced.name}.overwrite-{uuid.uuid4().hex}")
 
     part_cols = list(partition_by or [])
     mapped_fields = None
@@ -569,6 +573,9 @@ def write_delta_snapshot(
         # v0 itself (spec: every commit after enablement)
         _publish_commit(table_dir, 0, actions, "WRITE", {"mode": "ErrorIfExists"},
                         now_ms=now_ms, config=config)
+        if table_dir != replaced:
+            _swap_in(table_dir, replaced)
+            table_dir = replaced
     except BaseException:
         # the mkdir above is exclusive, so the dir is this call's own: left
         # behind, it would refuse every retry as "Delta table dir exists"
@@ -576,6 +583,23 @@ def write_delta_snapshot(
         raise
     return {"version": 0, "files": n_files, "rows": total_rows,
             "path": str(table_dir / "_delta_log" / f"{0:020d}.json")}
+
+
+def _swap_in(new: Path, old: Path) -> None:
+    """Replace ``old`` (a dir or file) with the dir ``new``: two renames
+    within one parent, then delete ``old``. If the second rename fails,
+    ``old`` goes back in place."""
+    trash = old.with_name(f".{old.name}.replaced-{uuid.uuid4().hex}")
+    os.rename(old, trash)
+    try:
+        os.rename(new, old)
+    except BaseException:
+        os.rename(trash, old)
+        raise
+    if trash.is_dir():
+        shutil.rmtree(trash, ignore_errors=True)
+    else:
+        trash.unlink(missing_ok=True)
 
 
 def _log_versions(log_dir: Path) -> list[int]:
@@ -1232,11 +1256,8 @@ def _scan_adds(
 
     outs = []
     if rel_kept:
-        df = (
-            spark.read.schema(schema)
-            .option("basePath", str(root))
-            .parquet(*[str(root / unquote(p)) for p in rel_kept])
-        )
+        df = parquet_files(spark, [str(root / unquote(p)) for p in rel_kept],
+                           schema, base_path=str(root))
         if with_lineage:
             # lineage must become REAL columns per branch: the hidden
             # ``_metadata`` column does not survive the rel/abs union.
@@ -1269,8 +1290,7 @@ def _scan_adds(
         )
         abs_path_of = {p: _resolved_add_path(root, p) for p in abs_kept}
         adf = (
-            spark.read.schema(data_schema)
-            .parquet(*sorted(abs_path_of.values()))
+            parquet_files(spark, sorted(abs_path_of.values()), data_schema)
             .withColumns({
                 "__src_fp": decoded_file_path(F.col("_metadata.file_path")),
                 "__src_ri": F.col("_metadata.row_index"),
@@ -1606,7 +1626,7 @@ def _backfill_stats_via_count(
 
     by_path = {
         r.p: r.n
-        for r in spark.read.parquet(*[str(p) for p in no_stats])
+        for r in parquet_files(spark, [str(p) for p in no_stats])
         .groupBy(decoded_file_path("_metadata.file_path").alias("p"))
         .agg(F.count(F.lit(1)).alias("n")).collect()
     }
@@ -2153,9 +2173,7 @@ def table_changes(
         dfs = []
         if under:
             dfs.append(
-                spark.read.schema(scan_schema)
-                .option("basePath", str(root))
-                .parquet(*under)
+                parquet_files(spark, under, scan_schema, base_path=str(root))
                 .withColumns(cdf_cols)
             )
         if outside:
@@ -2166,11 +2184,7 @@ def table_changes(
             data_schema = StructType(
                 [f for f in scan_schema.fields if f.name not in part_keys]
             )
-            adf = (
-                spark.read.schema(data_schema)
-                .parquet(*outside)
-                .withColumns(cdf_cols)
-            )
+            adf = parquet_files(spark, outside, data_schema).withColumns(cdf_cols)
             if part_keys:
                 lookup = spark.createDataFrame(
                     [
@@ -2290,9 +2304,8 @@ def table_changes(
             + [T.StructField("_change_type", T.StringType(), True)]
         )
         cdf = (
-            spark.read.schema(cdc_schema)
-            .option("basePath", str(root / "_change_data"))
-            .parquet(*sorted({p for p, _ in cdc_files}))
+            parquet_files(spark, sorted({p for p, _ in cdc_files}), cdc_schema,
+                          base_path=str(root / "_change_data"))
             .withColumn(
                 "__cdf_fp", decoded_file_path(F.col("_metadata.file_path"))
             )

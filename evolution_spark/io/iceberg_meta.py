@@ -58,6 +58,7 @@ from evolution_spark.io.iceberg_transforms import (
     result_ice_type,
     with_transform_column,
 )
+from evolution_spark.io.scan_filters import parquet_files
 
 # --------------------------------------------------------------------------
 # Spark <-> Iceberg schema mapping
@@ -713,7 +714,7 @@ def write_iceberg_table(
     now_ms = int(time.time() * 1000)
     snapshot_id = uuid.uuid4().int % (1 << 62)
     meta_dir = table_dir / "metadata"
-    meta_dir.mkdir(parents=True)
+    meta_dir.mkdir(parents=True, exist_ok=True)
 
     # ---- manifest: one ADDED entry per data file ----------------------
     entries = []
@@ -848,11 +849,7 @@ def write_iceberg_table(
         "snapshot-log": [{"timestamp-ms": now_ms, "snapshot-id": snapshot_id}],
         "metadata-log": [],
     }
-    meta_file = meta_dir / f"{0:05d}-{uuid.uuid4()}.metadata.json"
-    tmp = meta_dir / (meta_file.name + ".tmp")
-    tmp.write_text(json.dumps(metadata, indent=1))
-    os.replace(tmp, meta_file)  # atomic publish
-    (meta_dir / "version-hint.text").write_text(meta_file.name)
+    meta_file = _publish_metadata(meta_dir, None, metadata)
     return {
         "snapshot-id": snapshot_id,
         "files": len(entries),
@@ -892,8 +889,7 @@ def _position_delete_frame(spark, delete_files, dv_deletes):
     frames = []
     if delete_files:
         frames.append(
-            spark.read.schema("file_path string, pos long")
-            .parquet(*delete_files)
+            parquet_files(spark, delete_files, "file_path string, pos long")
             # delete files may record paths as plain paths or URIs;
             # normalize to the same decoded plain-path form the join uses
             .withColumn("file_path", decoded_file_path("file_path"))
@@ -1364,11 +1360,8 @@ def read_iceberg_table(
             g_scan = spark_schema_of(g_schema)
             if row_lineage:
                 g_scan = T.StructType(g_scan.fields + lineage_fields)
-            gdf = (
-                spark.read.schema(g_scan)
-                .option("basePath", str(table_dir / "data"))
-                .parquet(*group_of[(sid, spec_id)])
-            )
+            gdf = parquet_files(spark, group_of[(sid, spec_id)], g_scan,
+                                base_path=str(table_dir / "data"))
             if need_pos:
                 from evolution_spark.io.scan_filters import (
                     decoded_file_path as _dfp,
@@ -1415,11 +1408,7 @@ def read_iceberg_table(
         for b in branches[1:]:
             out = out.unionByName(b)
         return _attach_row_lineage(out).select(*out_names)
-    df = (
-        spark.read.schema(scan_schema)
-        .option("basePath", str(table_dir / "data"))
-        .parquet(*files)
-    )
+    df = parquet_files(spark, files, scan_schema, base_path=str(table_dir / "data"))
     if need_pos:
         from pyspark.sql import functions as F
 
@@ -1827,11 +1816,8 @@ def iceberg_table_changes(
                 raise IcebergFormatError(
                     f"manifest references unknown schema-id {gsid}"
                 )
-            gdf = (
-                spark.read.schema(spark_schema_of(g_schema))
-                .option("basePath", str(table_dir / "data"))
-                .parquet(*sorted(files_by_sid[gsid]))
-            )
+            gdf = parquet_files(spark, sorted(files_by_sid[gsid]), spark_schema_of(g_schema),
+                                base_path=str(table_dir / "data"))
             cols = {"__chg_fp": decoded_file_path(F.col("_metadata.file_path"))}
             if tag:
                 cols["__chg_ri"] = F.col("_metadata.row_index")
@@ -2516,17 +2502,18 @@ def widen_iceberg_column(path: str, name: str, new_type: str) -> dict:
     return _publish_evolved_schema(path, new_fields, "widen")
 
 
-def _publish_metadata(meta_dir: Path, prev_meta_file: Path, new_meta: dict) -> Path:
+def _publish_metadata(meta_dir: Path, prev_meta_file: Path | None, new_meta: dict) -> Path:
     """The ONE optimistic-concurrency metadata publish shared by every
-    commit path (snapshot commit, position deletes, schema evolution,
-    expire): claim the next version with a create-exclusive ``.commit-v``
+    commit path (table create, snapshot commit, position deletes, schema
+    evolution, expire): claim the next version (0 when ``prev_meta_file``
+    is None) with a create-exclusive ``.commit-v``
     marker — two writers racing from the same base version collide here,
     and the loser errors instead of its hint swap silently discarding the
     winner's metadata — then atomically write the new metadata.json and
     swap the version-hint (the commit point). Any failure between claim
     and publish releases the marker, so a crash never wedges the table
     with a permanent 'concurrent commit' error."""
-    version_n = int(prev_meta_file.name.split("-", 1)[0]) + 1
+    version_n = 0 if prev_meta_file is None else int(prev_meta_file.name.split("-", 1)[0]) + 1
     marker = meta_dir / f".commit-v{version_n:05d}"
     try:
         fd = os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY)

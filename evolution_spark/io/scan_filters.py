@@ -2,7 +2,8 @@
 implementation of (file, row-position) anti-join used by BOTH the Delta
 deletion-vector reader (``delta_log._scan_adds``) and the Iceberg
 position-delete reader (``iceberg_meta.read_iceberg_table``), so a fix to
-path normalization or join strategy lands once.
+path normalization or join strategy lands once. ``parquet_files`` is the one
+scan of a file list a table log or manifest already names.
 
 Path normalization: Spark's ``_metadata.file_path`` is a Hadoop URI —
 scheme-prefixed (``file:/x`` or ``file:///x``) AND percent-encoded
@@ -16,8 +17,11 @@ then percent-decode.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from typing import Sequence
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from evolution_spark.io.sqltext import quote_ident
 
@@ -25,6 +29,33 @@ from evolution_spark.io.sqltext import quote_ident
 # fully handled — local-fs engines only, like the rest of the native
 # table readers)
 URI_SCHEME_RE = "^[a-zA-Z][a-zA-Z0-9+.-]*:/+"
+
+
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def parquet_files(
+    spark: SparkSession,
+    files: Sequence[str],
+    schema: StructType | str | None = None,
+    base_path: str | None = None,
+) -> DataFrame:
+    """``spark.read.parquet(*files)`` over files a log already names,
+    without Spark's parallel file-listing job: past the listing threshold
+    (32 paths by default) Spark lists the paths with a job of its own,
+    which costs more than the serial listing it replaces (measured
+    0.04-0.06 s at 32 files against 0.33-0.42 s at 36-64). Spark lists
+    when the DataFrame is made and the scan reuses that listing, so the
+    threshold is raised to the file count for this call only."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    if base_path is not None:
+        reader = reader.option("basePath", base_path)
+    prev = spark.conf.get(_LISTING_THRESHOLD)
+    spark.conf.set(_LISTING_THRESHOLD, str(max(int(prev), len(files))))
+    try:
+        return reader.parquet(*files)
+    finally:
+        spark.conf.set(_LISTING_THRESHOLD, prev)
 
 
 def plain_path(p: str) -> str:

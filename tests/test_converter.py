@@ -1864,3 +1864,49 @@ def test_failed_delta_v0_leaves_no_table_dir(spark, tmp_path, small_flf, save_mo
               save_mode=save_mode).run(spark)
     assert read_delta_snapshot(spark, str(out)).count() == 40
     assert not any(p.name.startswith("_staging") for p in out.iterdir())
+
+
+def test_delta_snapshot_build_runs_no_listing_job(spark, tmp_path):
+    """Building the snapshot DataFrame of a 40-file table starts no Spark
+    job: the log names every file, so the parallel listing job Spark runs
+    past 32 paths is not started."""
+    from pathlib import Path
+
+    from evolution_spark.io.delta_log import read_delta_snapshot, write_delta_snapshot
+
+    out = tmp_path / "t"
+    write_delta_snapshot(spark.range(400).repartition(40), str(out))
+    assert len(list(Path(out).glob("*.parquet"))) == 40
+    sc, group = spark.sparkContext, "delta-snapshot-build"
+    sc.setJobGroup(group, group)
+    try:
+        df = read_delta_snapshot(spark, str(out))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert df.count() == 400
+
+
+def test_failed_delta_overwrite_keeps_old_output(spark, tmp_path, small_flf):
+    """An abort-mode parse error while overwriting an existing output with
+    a new Delta table leaves the old files in place and no half-written
+    table beside them; a good overwrite then replaces them."""
+    from pyspark.errors import PySparkException
+
+    from evolution_spark.io.delta_log import read_delta_snapshot
+
+    bad = tmp_path / "bad.flf"
+    bad.write_text("___ab____" + "1.5*****************" + ";" * 30 + "000true0" + "\n")
+    out = tmp_path / "out"
+    spark.range(3).write.parquet(str(out))
+    before = sorted(p.name for p in out.iterdir())
+    with pytest.raises(PySparkException, match="cool"):
+        Converter(str(bad), SCHEMA, str(out), target=Target.DELTA,
+                  save_mode="overwrite").run(spark)
+    assert sorted(p.name for p in out.iterdir()) == before
+    assert spark.read.parquet(str(out)).count() == 3
+    assert [p.name for p in tmp_path.iterdir() if p.name.startswith(".")] == []
+    Converter(small_flf, SCHEMA, str(out), target=Target.DELTA,
+              save_mode="overwrite").run(spark)
+    assert read_delta_snapshot(spark, str(out)).count() == 40
+    assert [p.name for p in tmp_path.iterdir() if p.name.startswith(".")] == []

@@ -53,6 +53,19 @@ def test_edge_cases_parse(spark):
     assert row.ctr_f64 == pytest.approx(-314.0)
 
 
+def test_parse_reads_only_the_line_column(spark):
+    """Input columns beside the line, even ones named like the parse's own
+    stage columns, do not leak into the parse; nor does a line column
+    named like one."""
+    lines = ["Åström実験...." + "    -123" + "000000042" + " true " + "__-3.14e2____",
+             "abc........." + "       7" + "000000000" + "false " + "_____1.5_____"]
+    want = parse_flf(_lines_df(spark, lines), EDGE).collect()
+    df = spark.createDataFrame([(l, "9", "x") for l in lines], "value string, __r1 string, __b string")
+    assert parse_flf(df, EDGE).collect() == want
+    line_named_like_a_stage = _lines_df(spark, lines).withColumnRenamed("value", "__t0")
+    assert parse_flf(line_named_like_a_stage, EDGE, column="__t0").collect() == want
+
+
 def test_strict_boolean_rejects_lax_forms(spark):
     base = "x..........." + "       1" + "000000001"
     for field in [" TRUE ", "  yes ", "   t  ", "  1   "]:
@@ -550,3 +563,69 @@ def test_file_forms_match_reference_parser(spark, tmp_path, form, mode):
     path.write_bytes(gzip.compress(data) if form == "gzip" else data)
     _assert_matches_reference(lambda: read_flf(spark, str(path), EDGE, mode=mode),
                               lines, EDGE, mode)
+
+
+# ---------------------------------------------------------------------------
+# Byte-slice and codepoint-slice branches of the parse
+# ---------------------------------------------------------------------------
+
+BRANCH = FixedSchema.from_dict({"name": "B", "version": 1, "columns": [
+    {"name": "head", "offset": 0, "length": 6, "dtype": "Utf8", "is_nullable": True},
+    {"name": "n", "offset": 6, "length": 20, "dtype": "Int64", "alignment": "Right",
+     "is_nullable": False},
+    {"name": "z", "offset": 26, "length": 8, "dtype": "Int32", "alignment": "Right",
+     "pad_symbol": "Zero", "is_nullable": False},
+    {"name": "f", "offset": 34, "length": 8, "dtype": "Float64",
+     "pad_symbol": "Underscore", "is_nullable": True},
+    {"name": "tail", "offset": 42, "length": 6, "dtype": "Utf8", "is_nullable": True},
+]})
+_SPELLINGS = ["7", "-42", "007", "-0", "+5", " 5", "5 ", "1.0", "000000",
+              str(2**63 - 1), str(2**63), str(-(2**63))]
+
+
+def _branch_lines():
+    """BRANCH lines for both slice branches; ``\\udc80`` stands for a stray
+    0x80 byte (written with ``surrogateescape``). ASCII lines, a multibyte
+    rune only in the first field and only in the last, the stray byte,
+    short and overlong lines, and Int spellings in a Whitespace- and a
+    Zero-padded field. Every line of full width comes twice, the second
+    time with a rune past the last field: its fields are the same, but
+    the line is no longer one byte per rune, so it takes the codepoint
+    branch."""
+    def line(head="abc", n="1", z="42", f="2.5", tail="xyz"):
+        vals = {"head": head, "n": n, "z": z, "f": f, "tail": tail}
+        return "".join(_padded(vals[c.name], c)[:c.length] for c in BRANCH.columns)
+
+    lines = [line(n=s) for s in _SPELLINGS] + [line(z=s) for s in _SPELLINGS]
+    lines += [line(head="éabc"), line(tail="x実y"), line(head="a\udc80b"),
+              line(head="é\udc80", tail="\udc80z")]
+    lines += [line()[:k] for k in (0, 3, 10, 30, 47)] + [line() + "xyz", line(tail="x実y") + "q"]
+    width = BRANCH.row_length
+    return lines + [l + "é" for l in lines if len(l) >= width]
+
+
+@pytest.mark.parametrize("mode", ["permissive", "abort"])
+def test_byte_and_codepoint_slices_match_reference(spark, tmp_path, mode):
+    """Lines sliced on bytes (one byte per rune) and on codepoints parse
+    alike, and as the reference parser does, in both modes; so does
+    ``Converter.validate`` over the same file. Spark decodes a stray 0x80
+    byte to U+FFFD when a value reaches Python, so the reference reads
+    the line with U+FFFD in its place: one rune either way."""
+    lines = _branch_lines()
+    assert any(len(l.encode("utf-8", "surrogateescape")) == len(l) for l in lines)
+    path = tmp_path / "branch.flf"
+    path.write_bytes("".join(l + "\n" for l in lines).encode("utf-8", "surrogateescape"))
+    ref_lines = [l.replace("\udc80", "\ufffd") for l in lines]
+    _assert_matches_reference(lambda: read_flf(spark, str(path), BRANCH, mode=mode),
+                              ref_lines, BRANCH, mode)
+    want = sorted(
+        (line, c.name, raw)
+        for line in ref_lines
+        for c in BRANCH.columns
+        if not c.is_nullable
+        for v, raw in [ref_parse_field(line, c)]
+        if v is None
+    )
+    assert want
+    got = Converter(str(path), BRANCH, "unused").validate(spark, sample_rows=10_000).collect()
+    assert sorted(tuple(r) for r in got) == want

@@ -482,3 +482,45 @@ def test_branch_typo_does_not_leak_data_files(spark, tmp_path):
     assert len(
         glob.glob(path + "/data/**/*.parquet", recursive=True)
     ) == n_before
+
+
+def test_iceberg_create_publishes_through_the_version_claim(spark, tmp_path, monkeypatch):
+    """A table's first snapshot is published like every later one: the
+    version-hint is swapped in by rename, never written in place, and a
+    create whose version 0 a rival create published first gets "concurrent
+    commit detected" instead of swapping the hint over the rival's."""
+    from pathlib import Path
+
+    import evolution_spark.io.iceberg_meta as im
+
+    df = spark.range(5).select(F.col("id").alias("k"))
+    real_write = Path.write_text
+
+    def no_in_place_hint(self, *a, **kw):
+        assert self.name != "version-hint.text", "version-hint written in place"
+        return real_write(self, *a, **kw)
+
+    monkeypatch.setattr(Path, "write_text", no_in_place_hint)
+    one = tmp_path / "one"
+    res = im.write_iceberg_table(df, str(one))
+    assert (one / "metadata" / "version-hint.text").read_text() == Path(res["metadata"]).name
+    assert res["metadata"].rsplit("/", 1)[-1].startswith("00000-")
+
+    publish, rival = im._publish_metadata, []
+
+    def rival_publishes_first(meta_dir, prev, meta):
+        # a concurrent create of the same table publishes its version 0
+        # between this create's data write and its own publish
+        rival.append(publish(meta_dir, prev, dict(meta, **{"table-uuid": "rival"})))
+        return publish(meta_dir, prev, meta)
+
+    monkeypatch.setattr(im, "_publish_metadata", rival_publishes_first)
+    two = tmp_path / "two"
+    with pytest.raises(RuntimeError, match="concurrent commit detected"):
+        im.write_iceberg_table(df, str(two))
+    monkeypatch.undo()
+    meta = two / "metadata"
+    assert (meta / "version-hint.text").read_text() == rival[0].name
+    assert sorted(p.name for p in meta.glob("*.metadata.json")) == [rival[0].name]
+    assert not list(meta.glob("*.tmp")) and not list(meta.glob(".*.tmp"))
+    assert read_iceberg_table(spark, str(two)).count() == 5

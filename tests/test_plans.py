@@ -99,11 +99,13 @@ def test_flf_parse_is_single_narrow_stage(spark, tmp_path):
 @pytest.mark.parametrize("which", ["bench", "F1", "F4"])
 def test_flf_parse_expression_shape(spark, tmp_path, which):
     """Each field is sliced, trimmed and cast exactly once per row: the
-    optimized plan of ``Converter.dataframe`` holds one ``substring`` per
-    column, one ``try_cast`` per Int/Float column and one ``RLIKE`` per Int
-    column (two with a digit pad), all in one whole-stage-codegen subtree
-    with no exchange and no Python. A single nested Column tree per field
-    repeats the slice, trim and cast in each CASE branch and fails this."""
+    optimized plan of ``Converter.dataframe`` holds one ``char_length`` (the
+    line's one-byte-per-rune gate), one byte slice and one codepoint slice
+    per column (the two branches of one ``IF``), one ``try_cast`` per
+    Int/Float column and one ``RLIKE`` per Int column (two with a digit
+    pad), all in one whole-stage-codegen subtree with no exchange and no
+    Python. A single nested Column tree per field repeats the slice, trim
+    and cast in each CASE branch and fails this."""
     import contextlib
     import io
 
@@ -122,7 +124,9 @@ def test_flf_parse_expression_shape(spark, tmp_path, which):
     ints = [c for c in sch.columns if c.dtype.startswith("Int")]
     floats = [c for c in sch.columns if c.dtype.startswith("Float")]
     digit_pads = [c for c in ints if c.pad_char.isdigit()]
-    assert plan.count("substring(") == len(sch.columns)
+    assert plan.count("char_length(") == 1
+    assert plan.count("cast(substring(") == len(sch.columns)  # byte slices
+    assert plan.count("substring(") == 2 * len(sch.columns)
     assert plan.count("try_cast(") == len(ints) + len(floats)
     assert plan.count("RLIKE(") == len(ints) + len(digit_pads)
     executed = qe.executedPlan().toString()
