@@ -19,6 +19,15 @@ engine implements all four targets plus the FLF re-encode sink:
   analogue); avro — native container-file codec (``io/avro.py``), no
   spark-avro module needed
 
+``save_mode`` is one rule for every target (``io/save_mode.py``): any
+mode creates at an absent path; ``error`` refuses and ``ignore`` skips an
+existing output before any Spark job runs; ``append`` adds one commit to a
+Delta or Iceberg table and new part files to any other target (a Delta or
+Iceberg target refuses a path that holds no table); ``overwrite`` of a
+Delta table is a commit, and of anything else replaces the WHOLE output,
+even when the session sets dynamic partition overwrite. A write that
+raises leaves no new output behind and an old output as it was.
+
 Whole pipeline: ``spark.read.text`` -> the staged parse projections of
 ``io/flf.py`` (slice, trim, cast, enforce; whole-stage codegen fuses them
 into one stage) -> sink.
@@ -38,7 +47,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from evolution_spark.io.avro import write_avro
-from evolution_spark.io.delta_log import commit_delta, write_delta_snapshot
+from evolution_spark.io.delta_log import _create_delta_table, _replay_log, commit_delta
 from evolution_spark.io.flf import (
     parse_failures,
     read_flf,
@@ -46,6 +55,7 @@ from evolution_spark.io.flf import (
     write_flf,
 )
 from evolution_spark.io.ipc import write_ipc
+from evolution_spark.io.save_mode import save_output
 from evolution_spark.schema import FixedSchema
 
 
@@ -79,7 +89,7 @@ class Converter:
     output_path: str
     target: Target = Target.PARQUET
     mode: str = "abort"  # abort | permissive (nullability enforcement, O9)
-    save_mode: str = "error"  # Spark SaveMode for the sink
+    save_mode: str = "error"  # error | append | overwrite | ignore (io/save_mode.py)
     single_file: bool = False
     max_partition_bytes: int | None = None
     # Hive-style output partitioning (parquet/delta/iceberg targets): at
@@ -135,115 +145,84 @@ class Converter:
             self._run(spark)
 
     def _run(self, spark: SparkSession) -> None:
-        df = self.dataframe(spark)
         target = Target(self.target)
-        if target is Target.FLF:
-            write_flf(
-                df,
-                self.schema,
-                self.output_path,
-                single_file=self.single_file,
-                mode=self.save_mode,
-                float_format=self.float_format,
-            )
-            return
+        if self.single_file and self.partition_by:
+            raise ValueError("single_file and partition_by are mutually exclusive")
+        if target is Target.AVRO and self.partition_by:
+            raise ValueError("avro sink does not support partition_by")
+        df = self.dataframe(spark)
         if self.single_file:
-            if self.partition_by:
-                raise ValueError("single_file and partition_by are mutually exclusive")
             df = df.coalesce(1)
-        if target in (Target.PARQUET, Target.ORC, Target.CSV):
-            writer = df.write.mode(self.save_mode)
-            if self.partition_by:
-                writer = writer.partitionBy(*self.partition_by)
-            if target is Target.CSV:
-                # header on by default so the file is self-describing; Spark
-                # quotes/escapes embedded delimiters per RFC 4180.
-                writer = writer.option("header", "true")
-            for k, v in self.writer_options.items():
-                writer = writer.option(k, v)
-            getattr(writer, target.value)(self.output_path)
-            return
-        if target is Target.IPC:
-            write_ipc(df, self.output_path)
-            return
-        import os as _os
+        save_output(self.output_path, self.save_mode, **self._sink(df, target))
 
-        exists = _os.path.exists(self.output_path)
+    def _sink(self, df: DataFrame, target: Target) -> dict[str, Any]:
+        """What only the target knows — write a new output, append to an
+        existing one — as ``save_output`` arguments; the save mode decides
+        which of them runs."""
         if target is Target.DELTA:
             # native writer (io/delta_log.py): distributed parquet data +
             # a spec-compliant _delta_log commit, no connector jar needed
-            # (target.rs:31-37). ignore no-ops on any existing path; append
-            # and overwrite onto a Delta table are a new commit (overwrite:
-            # remove+add); everything else writes version 0 — overwrite
-            # replaces whatever is there, the rest refuse an existing path.
-            if exists and self.save_mode == "ignore":
-                return
-            if self.save_mode in ("append", "overwrite") and _os.path.exists(
-                _os.path.join(self.output_path, "_delta_log")
-            ):
-                if self.partition_by:
-                    from evolution_spark.io.delta_log import _replay_log
-
-                    _, _, stored_parts, _ = _replay_log(Path(self.output_path))
-                    if list(self.partition_by) != stored_parts:
-                        raise ValueError(
-                            f"partition_by {self.partition_by} != table's "
-                            f"partitionColumns {stored_parts} — commits keep "
-                            "the table's layout; drop the argument or "
-                            "recreate the table"
-                        )
-                # schema drift under overwrite still raises (commit_delta's
-                # check) — matching Delta, where replacing the schema is an
-                # explicit overwriteSchema opt-in, not a silent rewrite
-                commit_delta(df, self.output_path, mode=self.save_mode)
-                return
-            write_delta_snapshot(
-                df, self.output_path,
-                mode="overwrite" if self.save_mode == "overwrite" else "error",
-                partition_by=self.partition_by,
+            # (target.rs:31-37); overwrite of a Delta table is a commit
+            # (remove + add), so the old versions stay readable
+            return dict(
+                create=lambda p: _create_delta_table(df, Path(p), self.partition_by),
+                append=lambda p: self._commit_delta(df, p, "append"),
+                overwrite=lambda p: self._commit_delta(df, p, "overwrite"),
+                table_marker="_delta_log",
             )
-            return
-        if target is Target.AVRO:
-            # native container-file codec (io/avro.py): distributed
-            # one-file-per-partition write, spec-compliant bytes
-            # (cross-validated against the JVM's avro-core reader in
-            # tests) — no spark-avro module needed. SaveModes: error
-            # refuses an existing dataset, overwrite replaces it, append
-            # adds container files, ignore no-ops.
-            if self.partition_by:
-                raise ValueError("avro sink does not support partition_by")
-            if exists:
-                if self.save_mode == "ignore":
-                    return
-                if self.save_mode == "error":
-                    raise ValueError(
-                        f"avro output exists: {self.output_path} (save_mode='error')"
-                    )
-                if self.save_mode == "overwrite":
-                    import shutil as _shutil
-
-                    _shutil.rmtree(self.output_path)
-            write_avro(df, self.output_path)
-            return
         if target is Target.ICEBERG:
             # native v2 writer (io/iceberg_meta.py): distributed parquet
             # data + spec-compliant metadata.json / manifest-list /
             # manifest Avro chain, no iceberg-spark-runtime needed.
-            # SaveModes: append commits a new snapshot, overwrite rewrites
-            # the table, ignore no-ops on an existing table. Row-level
-            # deletes still need the connector (target.rs:31-37).
+            # Row-level deletes still need the connector (target.rs:31-37).
             from evolution_spark.io.iceberg_meta import (
+                _create_iceberg_table,
                 append_iceberg_snapshot,
-                write_iceberg_table,
             )
 
-            if self.save_mode == "ignore" and exists:
-                return
-            if self.save_mode == "append" and exists:
-                append_iceberg_snapshot(df, self.output_path)
-                return
-            mode = "overwrite" if self.save_mode == "overwrite" else "error"
-            write_iceberg_table(
-                df, self.output_path, mode=mode, partition_by=self.partition_by
+            return dict(
+                create=lambda p: _create_iceberg_table(df, Path(p), self.partition_by),
+                append=lambda p: append_iceberg_snapshot(df, p),
+                table_marker="metadata/version-hint.text",
+                relocatable=False,
             )
-            return
+
+        def write(path: str, mode: str) -> None:
+            if target is Target.IPC:
+                write_ipc(df, path)
+            elif target is Target.AVRO:
+                # native container-file codec (io/avro.py): distributed
+                # one-file-per-partition write, spec-compliant bytes
+                # (cross-validated against the JVM's avro-core reader in
+                # tests) — no spark-avro module needed
+                write_avro(df, path)
+            elif target is Target.FLF:
+                write_flf(df, self.schema, path, mode=mode, float_format=self.float_format)
+            else:
+                writer = df.write.mode(mode)
+                if self.partition_by:
+                    writer = writer.partitionBy(*self.partition_by)
+                if target is Target.CSV:
+                    # header on by default so the file is self-describing;
+                    # Spark quotes/escapes embedded delimiters per RFC 4180.
+                    writer = writer.option("header", "true")
+                for k, v in self.writer_options.items():
+                    writer = writer.option(k, v)
+                getattr(writer, target.value)(path)
+
+        return dict(create=lambda p: write(p, "error"), append=lambda p: write(p, "append"))
+
+    def _commit_delta(self, df: DataFrame, path: str, mode: str) -> None:
+        if self.partition_by:
+            _, _, stored_parts, _ = _replay_log(Path(path))
+            if list(self.partition_by) != stored_parts:
+                raise ValueError(
+                    f"partition_by {self.partition_by} != table's "
+                    f"partitionColumns {stored_parts} — commits keep "
+                    "the table's layout; drop the argument or "
+                    "recreate the table"
+                )
+        # schema drift under overwrite still raises (commit_delta's check)
+        # — matching Delta, where replacing the schema is an explicit
+        # overwriteSchema opt-in, not a silent rewrite
+        commit_delta(df, path, mode=mode)

@@ -339,7 +339,7 @@ def write_avro(
         os.makedirs(path, exist_ok=True)
         stage = os.path.join(path, f"_staging_avro-{uuid.uuid4().hex}")
         try:
-            df.write.format("avro").mode("overwrite").save(stage)
+            df.write.format("avro").mode("error").save(stage)
             written: list[tuple[str, int]] = []
             for f in sorted(os.listdir(stage)):
                 if not f.endswith(".avro"):

@@ -7,8 +7,9 @@ unit; thousands of tiny files turn a 100 TB scan into a metadata storm).
 target: it sums the current file sizes from the filesystem (no data read),
 derives the output file count, and rewrites with ``coalesce`` (narrow, no
 shuffle) or ``repartition`` (when raising the file count or when output
-ordering should be randomized for balance). The rewrite is swap-based:
-written to a sibling temp dir, then swapped in via two renames. The swap
+ordering should be randomized for balance). The rewrite is an overwrite
+under the one save-mode rule (``io/save_mode.py``): written to a sibling
+temp dir, then swapped in via two renames. The swap
 is NOT atomic (POSIX has no two-path atomic swap short of renameat2): a
 crash between the renames, or a concurrent reader racing them, can observe
 a briefly-missing path. On failure mid-swap the original is renamed back so
@@ -29,9 +30,10 @@ from __future__ import annotations
 import math
 import os
 import shutil
-import uuid
 
 from pyspark.sql import SparkSession
+
+from evolution_spark.io.save_mode import save_output
 
 
 def compact_parquet(
@@ -73,16 +75,7 @@ def compact_parquet(
     if sort_within:
         out = out.sortWithinPartitions(*sort_within)
 
-    tmp = f"{path.rstrip('/')}.__compact_{uuid.uuid4().hex[:8]}"
-    out.write.mode("overwrite").parquet(tmp)
-    back = f"{path.rstrip('/')}.__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, back)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        os.rename(back, path)  # restore the original; compaction output kept in tmp
-        raise
-    shutil.rmtree(back, ignore_errors=True)
+    save_output(path, "overwrite", lambda p: out.write.mode("error").parquet(p))
 
     n_after = sum(
         1

@@ -46,6 +46,7 @@ from urllib.parse import quote
 
 from pyspark.sql import DataFrame
 
+from evolution_spark.io.save_mode import save_output
 from evolution_spark.io.scan_filters import parquet_files
 
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -437,15 +438,13 @@ def write_delta_snapshot(
     txn: tuple[str, int] | None = None,
     column_mapping: bool = False,
     configuration: dict | None = None,
-) -> dict:
+) -> dict | None:
     """Write ``df`` as a version-0 Delta table at ``path``.
 
-    ``mode``: ``error`` refuses an existing table dir; ``overwrite``
-    replaces it (fresh snapshot — still one commit). The replacement is
-    written beside the old dir and swapped in only once it is published,
-    so a failed write (say an abort-mode parse error) leaves the old table
-    as it was. Returns the commit summary (version, file count, row count)
-    for logging/tests.
+    ``mode`` follows ``io/save_mode.py`` (``overwrite`` replaces the whole
+    output with a fresh table, still one commit; ``append`` is refused,
+    ``commit_delta`` appends). Returns the commit summary (version, file
+    count, row count) for logging/tests.
 
     ``column_mapping=True`` creates the table in NAME mapping mode (the
     Databricks default after any RENAME/DROP COLUMN): every field gets a
@@ -456,12 +455,24 @@ def write_delta_snapshot(
     commits later. Partitioned mapped tables follow the spec layout:
     directory names AND ``partitionColumns`` AND ``partitionValues`` all
     use the PHYSICAL partition column name."""
-    table_dir = replaced = Path(path)
-    if table_dir.exists():
-        if mode != "overwrite":
-            raise ValueError(f"Delta table dir exists: {path} (mode={mode})")
-        table_dir = replaced.with_name(f".{replaced.name}.overwrite-{uuid.uuid4().hex}")
+    summary = save_output(path, mode, lambda p: _create_delta_table(
+        df, Path(p), partition_by, name, txn, column_mapping, configuration))
+    if summary is not None:
+        summary["path"] = str(Path(path) / "_delta_log" / f"{0:020d}.json")
+    return summary
 
+
+def _create_delta_table(
+    df: DataFrame,
+    table_dir: Path,
+    partition_by: list[str] | None = None,
+    name: str | None = None,
+    txn: tuple[str, int] | None = None,
+    column_mapping: bool = False,
+    configuration: dict | None = None,
+) -> dict:
+    """``write_delta_snapshot``'s write: version 0 of a new table at the
+    absent path ``table_dir``."""
     part_cols = list(partition_by or [])
     mapped_fields = None
     config: dict[str, str] = dict(configuration or {})
@@ -537,69 +548,42 @@ def write_delta_snapshot(
         }
 
     table_dir.mkdir(parents=True)
-    try:
-        stage = table_dir / f"_staging_v0-{uuid.uuid4().hex}"
-        writer = df.write.mode("error")
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(str(stage))
-        now_ms = int(time.time() * 1000)
-        add_actions, n_files, total_rows = _collect_staged_adds(
-            stage, table_dir, 0, now_ms, data_change=True,
-            spark=df.sparkSession,
-        )
-        shutil.rmtree(stage)
+    stage = table_dir / f"_staging_v0-{uuid.uuid4().hex}"
+    writer = df.write.mode("error")
+    if part_cols:
+        writer = writer.partitionBy(*part_cols)
+    writer.parquet(str(stage))
+    now_ms = int(time.time() * 1000)
+    add_actions, n_files, total_rows = _collect_staged_adds(
+        stage, table_dir, 0, now_ms, data_change=True,
+        spark=df.sparkSession,
+    )
+    shutil.rmtree(stage)
 
-        actions: list[dict] = []
-        if txn is not None:
-            actions.append({"txn": {"appId": txn[0], "version": txn[1]}})
-        actions.append({"protocol": protocol})
-        actions.append(
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "name": name,
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": schema_string,
-                    "partitionColumns": part_cols,
-                    "configuration": config,
-                    "createdTime": now_ms,
-                }
+    actions: list[dict] = []
+    if txn is not None:
+        actions.append({"txn": {"appId": txn[0], "version": txn[1]}})
+    actions.append({"protocol": protocol})
+    actions.append(
+        {
+            "metaData": {
+                "id": str(uuid.uuid4()),
+                "name": name,
+                "format": {"provider": "parquet", "options": {}},
+                "schemaString": schema_string,
+                "partitionColumns": part_cols,
+                "configuration": config,
+                "createdTime": now_ms,
             }
-        )
-        actions.extend(add_actions)
-        (table_dir / "_delta_log").mkdir()
-        # creation-time in-commit-timestamp enablement: the publisher stamps
-        # v0 itself (spec: every commit after enablement)
-        _publish_commit(table_dir, 0, actions, "WRITE", {"mode": "ErrorIfExists"},
-                        now_ms=now_ms, config=config)
-        if table_dir != replaced:
-            _swap_in(table_dir, replaced)
-            table_dir = replaced
-    except BaseException:
-        # the mkdir above is exclusive, so the dir is this call's own: left
-        # behind, it would refuse every retry as "Delta table dir exists"
-        shutil.rmtree(table_dir, ignore_errors=True)
-        raise
-    return {"version": 0, "files": n_files, "rows": total_rows,
-            "path": str(table_dir / "_delta_log" / f"{0:020d}.json")}
-
-
-def _swap_in(new: Path, old: Path) -> None:
-    """Replace ``old`` (a dir or file) with the dir ``new``: two renames
-    within one parent, then delete ``old``. If the second rename fails,
-    ``old`` goes back in place."""
-    trash = old.with_name(f".{old.name}.replaced-{uuid.uuid4().hex}")
-    os.rename(old, trash)
-    try:
-        os.rename(new, old)
-    except BaseException:
-        os.rename(trash, old)
-        raise
-    if trash.is_dir():
-        shutil.rmtree(trash, ignore_errors=True)
-    else:
-        trash.unlink(missing_ok=True)
+        }
+    )
+    actions.extend(add_actions)
+    (table_dir / "_delta_log").mkdir()
+    # creation-time in-commit-timestamp enablement: the publisher stamps
+    # v0 itself (spec: every commit after enablement)
+    _publish_commit(table_dir, 0, actions, "WRITE", {"mode": "ErrorIfExists"},
+                    now_ms=now_ms, config=config)
+    return {"version": 0, "files": n_files, "rows": total_rows}
 
 
 def _log_versions(log_dir: Path) -> list[int]:

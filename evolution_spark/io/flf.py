@@ -44,7 +44,6 @@ Semantics divergences from the reference (documented per SURVEY.md §7):
 from __future__ import annotations
 
 from contextlib import contextmanager
-from typing import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -521,21 +520,14 @@ def write_flf(
     schema: FixedSchema,
     path: str,
     overflow: str = "error",
-    single_file: bool = False,
     mode: str = "error",
     float_format: str = "native",
 ) -> None:
     """Encode + write an FLF dataset (reference O13).
 
     Each task writes its own part file — the reference's single-writer-thread
-    bottleneck (converter.rs:295-298) does not exist here. ``single_file=True``
-    is the ``coalesce(1)`` fidelity mode for one-output-file parity.
+    bottleneck (converter.rs:295-298) does not exist here; coalesce ``df``
+    to one partition for one-output-file parity.
     """
     encoded = encode_flf(df, schema, overflow=overflow, float_format=float_format)
-    if single_file:
-        encoded = encoded.coalesce(1)
     encoded.write.mode(mode).text(path)
-
-
-def columns_in_layout_order(schema: FixedSchema) -> Iterable[FixedColumn]:
-    return sorted(schema.columns, key=lambda c: c.offset)

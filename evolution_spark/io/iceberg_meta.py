@@ -58,6 +58,7 @@ from evolution_spark.io.iceberg_transforms import (
     result_ice_type,
     with_transform_column,
 )
+from evolution_spark.io.save_mode import save_output
 from evolution_spark.io.scan_filters import parquet_files
 
 # --------------------------------------------------------------------------
@@ -659,8 +660,11 @@ def write_iceberg_table(
     partition_by: list[str] | None = None,
     properties: dict[str, str] | None = None,
     distribute: bool = False,
-) -> dict:
+) -> dict | None:
     """Write ``df`` as a single-snapshot Iceberg v2 table at ``path``.
+
+    ``mode`` follows ``io/save_mode.py`` (``overwrite`` replaces the whole
+    output; ``append`` is refused, ``append_iceberg_snapshot`` appends).
 
     ``distribute=True`` is the spec connector's ``write.distribution-mode
     = hash``: ONE shuffle clustering rows by partition value before the
@@ -671,14 +675,23 @@ def write_iceberg_table(
 
     Returns a commit summary (snapshot id, files, rows) for tests/logs.
     """
-    import pyarrow.parquet as pq
+    return save_output(
+        path, mode,
+        lambda p: _create_iceberg_table(df, Path(p), partition_by, properties, distribute),
+        table_marker="metadata/version-hint.text", relocatable=False,
+    )
 
-    table_dir = Path(path)
-    if table_dir.exists():
-        if mode == "overwrite":
-            shutil.rmtree(table_dir)
-        else:
-            raise ValueError(f"iceberg table dir exists: {path} (mode={mode})")
+
+def _create_iceberg_table(
+    df: DataFrame,
+    table_dir: Path,
+    partition_by: list[str] | None = None,
+    properties: dict[str, str] | None = None,
+    distribute: bool = False,
+) -> dict:
+    """``write_iceberg_table``'s write: the first snapshot of a new table
+    in the empty directory ``table_dir``."""
+    import pyarrow.parquet as pq
 
     ice_schema = iceberg_schema_of(df.schema)
     by_name = {f["name"]: f for f in ice_schema["fields"]}

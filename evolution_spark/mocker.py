@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from evolution_spark.io.flf import encode_flf
+from evolution_spark.io.save_mode import save_output
 from evolution_spark.schema import FixedColumn, FixedSchema
 
 # A small public-domain pool of common US-English first names (the reference
@@ -151,4 +152,8 @@ class Mocker:
         encoded = encode_flf(rendered, self.schema, overflow="error")
         if self.single_file:
             encoded = encoded.coalesce(1)
-        encoded.write.mode(self.save_mode).text(self.output_path)
+        save_output(
+            self.output_path, self.save_mode,
+            lambda p: encoded.write.mode("error").text(p),
+            lambda p: encoded.write.mode("append").text(p),
+        )

@@ -334,29 +334,6 @@ _MINHASH_A = MINHASH_A[:N_HASHES]
 _MINHASH_B = MINHASH_B[:N_HASHES]
 
 
-def _minhash_sig(shingles: Column) -> Column:
-    """MinHash signature as one array column: sig[i] = min over shingles of
-    (a_i*h(s)+b_i) mod P. Used for small inputs / signature probes; the LSH
-    pipeline uses ``_minhash_sig_df`` (row-explode + hash-agg), which
-    generates small JIT-friendly code — 16 array_min(transform(...)) lambdas
-    in one projection produce oversized generated methods with 10-50x
-    run-to-run JIT variance.
-
-    NOTE: per-seed lambdas come from a factory — a two-parameter
-    ``lambda s, i=i`` would be treated by PySpark as an (element, index)
-    higher-order function and silently bind ``i`` to the array index column.
-    """
-    hs = F.transform(shingles, _base_hash)
-
-    def mixer(i: int):
-        a, b = _MINHASH_A[i], _MINHASH_B[i]
-        return lambda h: (h * a + b) % _MINHASH_P
-
-    return F.array(
-        *[F.array_min(F.transform(hs, mixer(i))) for i in range(N_HASHES)]
-    )
-
-
 def _minhash_sig_df(docs: DataFrame) -> DataFrame:
     """(doc_id, s0..s{N-1}) signature table via explode + 16 min-aggregations.
 

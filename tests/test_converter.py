@@ -8,6 +8,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from evolution_spark.converter import Converter, Target
@@ -1845,24 +1846,142 @@ def test_converter_delta_save_modes(spark, tmp_path, small_flf, existing, save_m
     assert read_delta_snapshot(spark, out).count() == rows
 
 
-@pytest.mark.parametrize("save_mode", ["error", "append"])
-def test_failed_delta_v0_leaves_no_table_dir(spark, tmp_path, small_flf, save_mode):
-    """An abort-mode parse error while writing version 0 removes the table
-    dir it made, so the retry on good input is not refused as existing."""
-    from pyspark.errors import PySparkException
+# Every other target's table, and the Mocker's: (existing output,
+# save_mode) -> rows read back ((snapshots, rows) for Iceberg), ValueError,
+# or "untouched". "foreign" is a dir the write did not make (one 3-row
+# Parquet file); "same" is a 40-row output of the same target. A file
+# target appends part files beside whatever is there; a table target
+# refuses a dir that holds no table.
+_FILE_SAVE_MODES = {
+    **{("absent", m): 40 for m in ("error", "append", "overwrite", "ignore")},
+    ("foreign", "error"): ValueError,
+    ("foreign", "append"): 40,
+    ("foreign", "overwrite"): 40,
+    ("foreign", "ignore"): "untouched",
+    ("same", "error"): ValueError,
+    ("same", "append"): 80,
+    ("same", "overwrite"): 40,
+    ("same", "ignore"): "untouched",
+}
+_SAVE_MODES = {
+    **{t: _FILE_SAVE_MODES for t in ("parquet", "orc", "csv", "avro", "ipc", "flf", "mocker")},
+    "iceberg": {
+        **{k: (1, v) if isinstance(v, int) else v for k, v in _FILE_SAVE_MODES.items()},
+        ("foreign", "append"): ValueError,
+        ("same", "append"): (2, 80),
+    },
+}
+_WRITERS = [t.value for t in Target] + ["mocker"]
+_BAD_FLF = "___ab____" + "1.5*****************" + ";" * 30 + "000true0" + "\n"
 
-    from evolution_spark.io.delta_log import read_delta_snapshot
 
+def _writer(target, src, out, save_mode):
+    """The Converter for ``target`` (or the Mocker) writing 40 rows."""
+    if target == "mocker":
+        return Mocker(SCHEMA, 40, str(out), seed=5, save_mode=save_mode)
+    return Converter(src, SCHEMA, str(out), target=Target(target), save_mode=save_mode)
+
+
+def _failing_writer(target, tmp_path, out, save_mode):
+    """A write that raises once its Spark job runs, and the message's text."""
+    if target == "mocker":
+        # a field narrower than the generator's values fails the encode
+        narrow = FixedSchema.from_dict({"name": "N", "version": 1, "columns": [
+            {"name": "cool", "offset": 0, "length": 3, "dtype": "Int32",
+             "is_nullable": False}]})
+        return Mocker(narrow, 40, str(out), seed=5, save_mode=save_mode), "too wide"
     bad = tmp_path / "bad.flf"
-    bad.write_text("___ab____" + "1.5*****************" + ";" * 30 + "000true0" + "\n")
+    bad.write_text(_BAD_FLF)
+    return _writer(target, str(bad), out, save_mode), "cool"
+
+
+def _files(out):
+    return sorted(str(p.relative_to(out)) for p in out.rglob("*") if p.is_file())
+
+
+def _read_back(spark, target, out):
+    """Rows the output holds, counted from its own data files (not the
+    foreign file): (latest version, rows) for Delta, (snapshots, rows) for
+    Iceberg."""
+    import io
+
+    import pyarrow.orc as orc
+    from pathlib import Path
+
+    from evolution_spark.io.avro import decode_avro_file
+    from evolution_spark.io.delta_log import _log_versions, read_delta_snapshot
+    from evolution_spark.io.iceberg_meta import _load_metadata, read_iceberg_table
+
+    out = Path(out)
+    if target == "delta":
+        return (_log_versions(out / "_delta_log")[-1],
+                read_delta_snapshot(spark, str(out)).count())
+    if target == "iceberg":
+        return (len(_load_metadata(out)[0]["snapshots"]),
+                read_iceberg_table(spark, str(out)).count())
+    ext, count = {
+        "parquet": (".parquet", lambda f: pq.read_metadata(f).num_rows),
+        "orc": (".orc", lambda f: orc.ORCFile(f).nrows),
+        "csv": (".csv", lambda f: len(f.read_text().splitlines()) - 1),
+        "avro": (".avro", lambda f: len(decode_avro_file(io.BytesIO(f.read_bytes()))[1])),
+        "ipc": (".arrow", lambda f: pa.ipc.open_file(f).read_all().num_rows),
+        "flf": (".txt", lambda f: len(f.read_text().splitlines())),
+        "mocker": (".txt", lambda f: len(f.read_text().splitlines())),
+    }[target]
+    return sum(count(f) for f in out.rglob("*" + ext) if f.name != "foreign.parquet")
+
+
+def _hidden(d):
+    return [p.name for p in d.iterdir() if p.name.startswith(".")]
+
+
+@pytest.mark.parametrize(
+    "target,existing,save_mode",
+    [(t, e, m) for t, table in _SAVE_MODES.items() for e, m in sorted(table)],
+)
+def test_save_modes(spark, tmp_path, small_flf, target, existing, save_mode):
+    """Every save_mode against an absent path, a foreign dir and an output
+    of the same target, for each Converter target but Delta (above) and
+    for the Mocker: what the write raises, leaves or reads back."""
+    out = tmp_path / "out"
+    if existing == "foreign":
+        out.mkdir()
+        pq.write_table(pa.table({"id": [0, 1, 2]}), out / "foreign.parquet")
+    elif existing == "same":
+        _writer(target, small_flf, out, "error").run(spark)
+    before = _files(out) if out.exists() else None
+    want = _SAVE_MODES[target][(existing, save_mode)]
+    if want is ValueError:
+        with pytest.raises(ValueError, match="exists"):
+            _writer(target, small_flf, out, save_mode).run(spark)
+        assert _files(out) == before
+        return
+    _writer(target, small_flf, out, save_mode).run(spark)
+    if want == "untouched":
+        assert _files(out) == before
+        return
+    kept = (existing, save_mode) == ("foreign", "append")
+    assert ("foreign.parquet" in _files(out)) == kept
+    assert _read_back(spark, target, out) == want
+    assert _hidden(tmp_path) == []
+
+
+@pytest.mark.parametrize(
+    "target,save_mode", [(t, m) for t in _WRITERS for m in ("error", "append")]
+)
+def test_failed_create_leaves_no_output(spark, tmp_path, small_flf, target, save_mode):
+    """A write that raises at an absent path (an abort-mode parse error; a
+    mock value too wide for its field) removes what it made, so the retry
+    is not refused as existing."""
     out = tmp_path / "nested" / "out"
-    with pytest.raises(PySparkException, match="cool"):
-        Converter(str(bad), SCHEMA, str(out), target=Target.DELTA,
-                  save_mode=save_mode).run(spark)
+    failing, message = _failing_writer(target, tmp_path, out, save_mode)
+    with pytest.raises(PySparkException, match=message):
+        failing.run(spark)
     assert not out.exists()
-    Converter(small_flf, SCHEMA, str(out), target=Target.DELTA,
-              save_mode=save_mode).run(spark)
-    assert read_delta_snapshot(spark, str(out)).count() == 40
+    assert _hidden(out.parent) == []
+    _writer(target, small_flf, out, save_mode).run(spark)
+    rows = _read_back(spark, target, out)
+    assert rows == ((0, 40) if target == "delta" else (1, 40) if target == "iceberg" else 40)
     assert not any(p.name.startswith("_staging") for p in out.iterdir())
 
 
@@ -1887,26 +2006,28 @@ def test_delta_snapshot_build_runs_no_listing_job(spark, tmp_path):
     assert df.count() == 400
 
 
-def test_failed_delta_overwrite_keeps_old_output(spark, tmp_path, small_flf):
-    """An abort-mode parse error while overwriting an existing output with
-    a new Delta table leaves the old files in place and no half-written
-    table beside them; a good overwrite then replaces them."""
-    from pyspark.errors import PySparkException
-
-    from evolution_spark.io.delta_log import read_delta_snapshot
-
-    bad = tmp_path / "bad.flf"
-    bad.write_text("___ab____" + "1.5*****************" + ";" * 30 + "000true0" + "\n")
+@pytest.mark.parametrize(
+    "target,existing", [(t, e) for t in _WRITERS for e in ("foreign", "same")]
+)
+def test_failed_overwrite_keeps_old_output(spark, tmp_path, small_flf, target, existing):
+    """A write that raises while overwriting an existing output (a foreign
+    dir, or an output of the same target) leaves the old files in place
+    and nothing half-written beside them; a good overwrite then replaces
+    them (a Delta table by a commit)."""
     out = tmp_path / "out"
-    spark.range(3).write.parquet(str(out))
-    before = sorted(p.name for p in out.iterdir())
-    with pytest.raises(PySparkException, match="cool"):
-        Converter(str(bad), SCHEMA, str(out), target=Target.DELTA,
-                  save_mode="overwrite").run(spark)
-    assert sorted(p.name for p in out.iterdir()) == before
-    assert spark.read.parquet(str(out)).count() == 3
-    assert [p.name for p in tmp_path.iterdir() if p.name.startswith(".")] == []
-    Converter(small_flf, SCHEMA, str(out), target=Target.DELTA,
-              save_mode="overwrite").run(spark)
-    assert read_delta_snapshot(spark, str(out)).count() == 40
-    assert [p.name for p in tmp_path.iterdir() if p.name.startswith(".")] == []
+    if existing == "foreign":
+        spark.range(3).write.parquet(str(out))
+    else:
+        _writer(target, small_flf, out, "error").run(spark)
+    before = _files(out)
+    failing, message = _failing_writer(target, tmp_path, out, "overwrite")
+    with pytest.raises(PySparkException, match=message):
+        failing.run(spark)
+    assert _files(out) == before
+    if existing == "foreign":
+        assert spark.read.parquet(str(out)).count() == 3
+    assert _hidden(tmp_path) == []
+    _writer(target, small_flf, out, "overwrite").run(spark)
+    want = {"delta": (int(existing == "same"), 40), "iceberg": (1, 40)}.get(target, 40)
+    assert _read_back(spark, target, out) == want
+    assert _hidden(tmp_path) == []
