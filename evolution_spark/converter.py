@@ -39,7 +39,7 @@ has no analogue here. ``single_file=True`` restores one-output-file parity via
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 from enum import Enum
 from pathlib import Path
 from typing import Any
@@ -106,9 +106,6 @@ class Converter:
     @classmethod
     def from_schema_path(cls, input_path: str, schema_path: str | Path, output_path: str, **kw: Any) -> "Converter":
         return cls(input_path, FixedSchema.from_path(schema_path), output_path, **kw)
-
-    def with_options(self, **kw: Any) -> "Converter":
-        return replace(self, **kw)
 
     # -- execution ---------------------------------------------------------
 

@@ -52,16 +52,6 @@ def word_shingles(col, k: int = 3) -> Column:
     ).otherwise(F.array(F.concat_ws(" ", w)))
 
 
-def char_ngrams(col, n: int = 5) -> Column:
-    """Distinct character n-grams of normalized text."""
-    t = norm_text(col)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(t) - n + 1, F.lit(1))),
-        lambda i: t.substr(i, F.lit(n)),
-    )
-    return F.array_distinct(grams)
-
-
 # ---------------------------------------------------------------------------
 # Hashing (cross-engine portable: md5-hex prefix as integer)
 # ---------------------------------------------------------------------------

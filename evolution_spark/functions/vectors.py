@@ -11,8 +11,6 @@ import hashlib
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from evolution_spark.functions.text import hash32
-
 
 def lit_long_array(values) -> Column:
     """Bigint array literal as ONE parsed SQL expression. Building the same
@@ -71,13 +69,6 @@ def plane_sign_value(plane: int, dim_index: int) -> float:
     bit-identical to the SQL form ('0x'||substr(md5('j:i'),1,8))::BIGINT % 2."""
     h = int(hashlib.md5(f"{plane}:{dim_index}".encode()).hexdigest()[:8], 16)
     return 1.0 if h % 2 == 0 else -1.0
-
-
-def plane_sign(plane: int, dim_index: Column) -> Column:
-    """Column form of ``plane_sign_value`` (for oracle-symmetric expressions
-    where the dim index is itself a column)."""
-    h = hash32(F.concat(F.lit(f"{plane}:"), dim_index.cast("string")))
-    return F.when(h % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
 
 
 def lsh_bucket(vec_col, n_planes: int, dim: int) -> Column:

@@ -9,11 +9,11 @@ derives the output file count, and rewrites with ``coalesce`` (narrow, no
 shuffle) or ``repartition`` (when raising the file count or when output
 ordering should be randomized for balance). The rewrite is an overwrite
 under the one save-mode rule (``io/save_mode.py``): written to a sibling
-temp dir, then swapped in via two renames. The swap
+temp dir, then swapped in by renames (old aside, new in place). The swap
 is NOT atomic (POSIX has no two-path atomic swap short of renameat2): a
 crash between the renames, or a concurrent reader racing them, can observe
-a briefly-missing path. On failure mid-swap the original is renamed back so
-no committed data is lost; a production lake should layer a table format's
+a briefly-missing or empty path. On failure mid-swap the original is
+renamed back so no committed data is lost; a production lake should layer a table format's
 commit protocol (Delta/Iceberg) on top for reader-visible atomicity.
 
 Hive-partitioned layouts (``col=value`` subdirectories) are rejected — a

@@ -30,7 +30,11 @@ from evolution_spark.functions.text import (
     MINHASH_B,
     MINHASH_P,
     hash32 as _base_hash,
+    lang_id,
     norm_text as _norm_text,
+    quality_score as _quality_score,
+    token_count_bpe_ish,
+    token_count_ws,
     word_shingles,
 )
 
@@ -53,7 +57,7 @@ def text_stats(spark, sf_dir):
     """Per-document statistics: char/word/punct counts — one narrow
     projection over the scan."""
     d = table(spark, sf_dir, "documents")
-    n_words = F.size(F.split(F.trim(F.col("text")), " "))
+    n_words = token_count_ws(F.col("text"))
     return d.select(
         "doc_id",
         "lang",
@@ -80,16 +84,9 @@ def token_count(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
-        F.size(F.split(F.trim(F.col("text")), " ")).alias("ws_tokens"),
-        F.size(
-            F.regexp_extract_all(F.lower("text"), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]"), 0)
-        ).alias("bpe_ish_tokens"),
+        token_count_ws(F.col("text")).alias("ws_tokens"),
+        token_count_bpe_ish(F.col("text")).alias("bpe_ish_tokens"),
     )
-
-
-def _stopword_count(lang: str) -> Column:
-    pattern = r"\b(" + "|".join(LANG_STOPWORDS[lang]) + r")\b"
-    return F.size(F.regexp_extract_all(F.lower("text"), F.lit(pattern), 0))
 
 
 def _stopword_count_sql(lang: str) -> str:
@@ -119,17 +116,8 @@ def lang_id_heuristic(spark, sf_dir):
     stopword hits (deterministic tie-break by the fixed en>de>es>fr order so
     both engines agree)."""
     d = table(spark, sf_dir, "documents")
-    en, de, es, fr = (_stopword_count(x) for x in ("en", "de", "es", "fr"))
-    has_cjk = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[\x{4e00}-\x{9fff}]"), 0)) > 0
     return d.select(
-        "doc_id",
-        F.col("lang").alias("lang_true"),
-        F.when(has_cjk, "zh")
-        .when((en >= de) & (en >= es) & (en >= fr), "en")
-        .when((de >= es) & (de >= fr), "de")
-        .when(es >= fr, "es")
-        .otherwise("fr")
-        .alias("lang_pred"),
+        "doc_id", F.col("lang").alias("lang_true"), lang_id(F.col("text")).alias("lang_pred")
     )
 
 
@@ -150,22 +138,10 @@ def quality_score(spark, sf_dir):
     """Heuristic quality score in [0,1]: length saturation + low symbol noise
     + lexical diversity (type/token ratio)."""
     d = table(spark, sf_dir, "documents")
-    length_term = F.least(F.length("text") / 500.0, F.lit(1.0))
-    n_sym = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[^a-zA-Z0-9\s\x{4e00}-\x{9fff}]"), 0))
-    noise_term = 1.0 - F.least(n_sym * 1.0 / F.greatest(F.length("text"), F.lit(1)), F.lit(1.0))
-    words = F.split(F.trim(F.col("text")), " ")
-    lower_words = F.split(F.lower(F.trim(F.col("text"))), " ")
-    ttr_term = F.least(
-        F.size(F.array_distinct(lower_words)) * 1.0 / F.greatest(F.size(words), F.lit(1)),
-        F.lit(1.0),
-    )
-    return d.select(
-        "doc_id",
-        # NO rounding: identical scalar expression trees yield bit-identical
-        # doubles in both engines, while ROUND diverges when a value lands on
-        # the half-grid (integer ratios do, frequently)
-        (0.4 * length_term + 0.3 * noise_term + 0.3 * ttr_term).alias("quality"),
-    )
+    # NO rounding: identical scalar expression trees yield bit-identical
+    # doubles in both engines, while ROUND diverges when a value lands on
+    # the half-grid (integer ratios do, frequently)
+    return d.select("doc_id", _quality_score(F.col("text")).alias("quality"))
 
 
 @query(
@@ -334,23 +310,6 @@ _MINHASH_A = MINHASH_A[:N_HASHES]
 _MINHASH_B = MINHASH_B[:N_HASHES]
 
 
-def _minhash_sig_df(docs: DataFrame) -> DataFrame:
-    """(doc_id, s0..s{N-1}) signature table via explode + 16 min-aggregations.
-
-    Scale shape: the explode produces docs x shingles scalar rows; partial
-    (map-side) min-aggregation collapses them before the one shuffle on
-    doc_id. Every expression stays small enough for clean whole-stage
-    codegen."""
-    hs = docs.select(
-        "doc_id", F.explode(_shingles(F.col("text"))).alias("sh")
-    ).select("doc_id", _base_hash(F.col("sh")).alias("h"))
-    aggs = [
-        F.min((F.col("h") * _MINHASH_A[i] + _MINHASH_B[i]) % _MINHASH_P).alias(f"s{i}")
-        for i in range(N_HASHES)
-    ]
-    return hs.groupBy("doc_id").agg(*aggs)
-
-
 _BASEHASH_SQL = (
     "list_transform(shingles, s -> ('0x'||substr(md5(s),1,8))::BIGINT)"
 )
@@ -376,8 +335,10 @@ _MINHASH_SQL = (
 def dedup_minhash_signature(spark, sf_dir):
     """First/last MinHash signature components per doc (signature
     correctness probe for the LSH pipeline)."""
+    from evolution_spark.operators.dedup import _signatures
+
     d = table(spark, sf_dir, "documents")
-    sig_df = _minhash_sig_df(d)
+    sig_df = _signatures(d, "doc_id", "text", N_HASHES, SHINGLE_K)
     return sig_df.select(
         "doc_id",
         F.col("s0").alias("sig0"),
@@ -386,15 +347,12 @@ def dedup_minhash_signature(spark, sf_dir):
 
 
 def minhash_lsh_pairs(spark, sf_dir) -> DataFrame:
-    """Candidate pairs via LSH banding + exact Jaccard verification.
+    """Candidate pairs via LSH banding + exact Jaccard verification
+    (``operators.dedup.minhash_lsh_candidates``): the band self-join
+    carries only ids and band hashes, and shingles are re-derived from the
+    raw text for the deduplicated candidate pairs alone."""
+    from evolution_spark.operators.dedup import minhash_lsh_candidates
 
-    Scale-critical shape: the band self-join carries ONLY (band_idx,
-    band_hash, doc_id) — never the shingle arrays. Candidate pairs are
-    deduplicated *first*, and the (small) unique-pair set then joins the
-    shingle table twice to fetch shingles for the exact Jaccard. Carrying
-    arrays through the band explode + join multiplies shuffle volume by
-    bands x candidates (measured ~25x slower at sf0.1).
-    """
     # The signature projection is compute-dense (shingles x N_HASHES md5s per
     # doc); spread it across all cores — the driver testdata is one row group,
     # which would otherwise pin the whole stage to one task. At cluster scale
@@ -402,51 +360,10 @@ def minhash_lsh_pairs(spark, sf_dir) -> DataFrame:
     d = table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
-    sig_df = _minhash_sig_df(d)
-    bands = sig_df.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.md5(
-                            F.concat_ws(
-                                "-",
-                                *[F.col(f"s{b * BAND_ROWS + r}") for r in range(BAND_ROWS)],
-                            )
-                        ).alias("band_hash"),
-                    )
-                    for b in range(N_HASHES // BAND_ROWS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_idx", "band.band_hash")
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band_idx", "band_hash")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band_idx", "band_hash")
-    pairs = (
-        a.join(b, ["band_idx", "band_hash"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
+    pairs = minhash_lsh_candidates(
+        d, "doc_id", "text", N_HASHES, BAND_ROWS, SHINGLE_K, JACCARD_THRESHOLD
     )
-    # Re-derive shingles only for the candidate pairs (tiny set) from the raw
-    # text instead of re-materializing the full 5k/5M-doc shingle table twice.
-    docs = d.select("doc_id", "text")
-    pairs_sh = pairs.join(
-        docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a")), "doc_a"
-    ).join(
-        docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b")), "doc_b"
-    ).select(
-        "doc_a",
-        "doc_b",
-        _shingles(F.col("text_a")).alias("sh_a"),
-        _shingles(F.col("text_b")).alias("sh_b"),
-    )
-    jaccard = F.size(F.array_intersect("sh_a", "sh_b")) * 1.0 / F.size(F.array_union("sh_a", "sh_b"))
-    return pairs_sh.select(
-        "doc_a", "doc_b", jaccard.alias("jaccard")
-    ).where(F.col("jaccard") >= JACCARD_THRESHOLD)
+    return pairs.select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "jaccard")
 
 
 _BANDS_SQL = ", ".join(

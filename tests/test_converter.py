@@ -1985,6 +1985,29 @@ def test_failed_create_leaves_no_output(spark, tmp_path, small_flf, target, save
     assert not any(p.name.startswith("_staging") for p in out.iterdir())
 
 
+@pytest.mark.parametrize("target,step", [("delta", "_create_delta_table"), ("ipc", "write_ipc")])
+def test_create_keeps_an_output_made_during_its_write(spark, tmp_path, small_flf, monkeypatch, target, step):
+    """The path was absent when the write began, and another writer put an
+    output there while this one's job ran: the write raises and the rival's
+    output stays as it was."""
+    import evolution_spark.converter as converter
+
+    out = tmp_path / "out"
+    real, rival = getattr(converter, step), []
+
+    def rival_first(*a):
+        spark.range(3).write.parquet(str(out))
+        rival.append(_files(out))
+        return real(*a)
+
+    monkeypatch.setattr(converter, step, rival_first)
+    with pytest.raises(ValueError, match="output exists"):
+        _writer(target, small_flf, out, "error").run(spark)
+    assert _files(out) == rival[0]
+    assert spark.read.parquet(str(out)).count() == 3
+    assert _hidden(tmp_path) == []
+
+
 def test_delta_snapshot_build_runs_no_listing_job(spark, tmp_path):
     """Building the snapshot DataFrame of a 40-file table starts no Spark
     job: the log names every file, so the parallel listing job Spark runs
