@@ -20,20 +20,24 @@ def _tree(d):
     return sorted(str(p.relative_to(d)) for p in Path(d).rglob("*"))
 
 
+@pytest.mark.parametrize("rival", ["output", "claim"])
 @pytest.mark.parametrize("save_mode", ["error", "append", "ignore", "overwrite"])
-def test_rival_output_made_during_a_create_survives(tmp_path, save_mode):
+def test_rival_output_made_during_a_create_survives(tmp_path, save_mode, rival):
     """The path was absent when the write began, and another writer put an
-    output there while this one's ``create`` ran: every mode raises, the
-    rival's output stays as it was, and no hidden sibling is left."""
+    output there while this one's ``create`` ran (files, or the still-empty
+    dir of a writer that creates in place): every mode raises, the rival's
+    dir stays as it was, and no hidden sibling is left."""
     out = tmp_path / "out"
 
     def create(p):
-        _write(out, "rival")
+        out.mkdir()
+        if rival == "output":
+            _write(out, "rival")
         _write(p, "mine")
 
     with pytest.raises(ValueError, match="output exists"):
         save_output(str(out), save_mode, create, lambda p: _write(p, "appended"))
-    assert _tree(tmp_path) == ["out", "out/rival"]
+    assert _tree(tmp_path) == ["out"] + (["out/rival"] if rival == "output" else [])
 
 
 def test_create_in_place_holds_the_path(tmp_path):
