@@ -1,14 +1,21 @@
-"""Avro container-file sink and source in pure Python — implements the
-reference's declared ``avro`` feature without the spark-avro datasource
-module (absent from this classpath; only avro-core jars ship with Spark).
+"""Avro container-file codec in pure Python, and the Avro target built
+on it — implements the reference's declared ``avro`` feature without the
+spark-avro datasource module (absent from this classpath; only avro-core
+jars ship with Spark).
 
 The Avro object-container format is an open spec (magic ``Obj\\x01``, a
 metadata map carrying the JSON schema + codec, a 16-byte sync marker,
 then length-prefixed record blocks): small enough to implement directly.
-Records encode with zigzag-varint longs, length-prefixed UTF-8 strings,
-IEEE little-endian floats, and ``["null", T]`` unions for nullable
-fields; timestamps/dates use the standard logical types
-(timestamp-micros / local-timestamp-micros / date).
+This module is the engine's one Avro codec: the Avro target's part files
+and the Iceberg writer's manifests and manifest lists (``io/iceberg_meta``)
+share its header writer, block framer, reader and value codec. The value
+codec is compiled once per schema and handles records, arrays, unions and
+the primitives on RAW values (zigzag-varint longs, length-prefixed UTF-8
+strings, IEEE little-endian floats); logical types are left to callers.
+The Avro target maps Spark types to Avro ones (``avro_schema_of``: nullable
+fields become ``["null", T]`` unions, timestamps/dates the standard
+timestamp-micros / local-timestamp-micros / date logical types) and adapts
+pandas values to raw ones and back (``_to_raw`` / ``_from_raw``).
 
 Distribution mirrors ``io/ipc.py``: every task encodes its own partition
 into its own ``part-*.avro`` file via ``mapInPandas`` (no driver
@@ -28,6 +35,7 @@ import os
 import shutil
 import struct
 import uuid
+from pathlib import Path
 from typing import Iterator
 
 from pyspark.sql import DataFrame
@@ -79,7 +87,7 @@ def avro_schema_of(schema: StructType, name: str = "spark_record") -> dict:
 
 
 # --------------------------------------------------------------------------
-# primitive codec
+# value codec: raw Avro values, compiled once per schema
 # --------------------------------------------------------------------------
 
 
@@ -108,47 +116,61 @@ def _dec_long(buf: memoryview, pos: int) -> tuple[int, int]:
     return (acc >> 1) ^ -(acc & 1), pos
 
 
-def _base_type(ft) -> str:
-    return ft["type"] if isinstance(ft, dict) else ft
+def _enc_bytes(b: bytes, out: bytearray) -> None:
+    _enc_long(len(b), out)
+    out.extend(b)
 
 
-def _encoder(ft, session_tz: str = "UTC"):
-    """Encoder for one (non-union) avro type, honoring logical types.
+def _dec_bytes(buf, pos):
+    n, pos = _dec_long(buf, pos)
+    return bytes(buf[pos : pos + n]), pos + n
 
-    ``timestamp-micros`` is a UTC INSTANT per the spec, but pandas hands
-    executor code session-local NAIVE timestamps — so the encoder
-    localizes to ``session_tz`` before taking the epoch value; writing
-    from a non-UTC session would otherwise shift every instant by the
-    zone offset (only self-round-trips would cancel the error).
-    ``local-timestamp-micros`` (NTZ) is zone-free and stays naive."""
-    base = _base_type(ft)
-    logical = ft.get("logicalType") if isinstance(ft, dict) else None
 
-    if base in ("long", "int"):
-        if logical == "date":
-            return lambda v, out: _enc_long(v.toordinal() - _EPOCH_DAYS, out)
-        if logical == "timestamp-micros":
-            from zoneinfo import ZoneInfo
+def _dec_str(buf, pos):
+    n, pos = _dec_long(buf, pos)
+    return bytes(buf[pos : pos + n]).decode("utf-8"), pos + n
 
-            tzinfo = ZoneInfo(session_tz)
 
-            def enc_instant(v, out):
-                # DST policy mirrors the JVM: ambiguous wall times take the
-                # EARLIER offset (summer time), spring-forward gaps shift
-                # forward — tz_localize would otherwise raise mid-job on
-                # data Spark itself accepts
-                ts = (
-                    v
-                    if v.tzinfo is not None
-                    else v.tz_localize(
-                        tzinfo, ambiguous=True, nonexistent="shift_forward"
-                    )
-                )
-                _enc_long(ts.value // 1000, out)  # aware .value = UTC ns
+def _encoder(t):
+    """Compile ``enc(v, out)`` for Avro schema ``t``: records (a mapping
+    by field name), arrays, two-branch unions with ``null`` (None takes
+    the ``null`` branch, any other value the other one) and the
+    primitives. Logical types
+    are not applied: a ``date`` is its int day count and a
+    ``logicalType: map`` array is an array of key/value records."""
+    if isinstance(t, list):
+        null = t.index("null")
+        branch = 1 - null
+        inner = _encoder(t[branch])
 
-            return enc_instant
-        if logical == "local-timestamp-micros":
-            return lambda v, out: _enc_long(v.value // 1000, out)  # pd ns->us
+        def enc_union(v, out):
+            if v is None:
+                _enc_long(null, out)
+            else:
+                _enc_long(branch, out)
+                inner(v, out)
+        return enc_union
+    base = t["type"] if isinstance(t, dict) else t
+    if base == "record":
+        fields = [(f["name"], _encoder(f["type"])) for f in t["fields"]]
+
+        def enc_record(v, out):
+            for name, enc in fields:
+                enc(v[name], out)
+        return enc_record
+    if base == "array":
+        enc_item = _encoder(t["items"])
+
+        def enc_array(v, out):
+            # one block of n items, then the 0 terminator
+            items = list(v)
+            if items:
+                _enc_long(len(items), out)
+                for item in items:
+                    enc_item(item, out)
+            _enc_long(0, out)
+        return enc_array
+    if base in ("int", "long"):
         return lambda v, out: _enc_long(int(v), out)
     if base == "double":
         return lambda v, out: out.extend(struct.pack("<d", float(v)))
@@ -157,51 +179,52 @@ def _encoder(ft, session_tz: str = "UTC"):
     if base == "boolean":
         return lambda v, out: out.append(1 if v else 0)
     if base == "string":
-        def enc_str(v, out):
-            b = str(v).encode("utf-8")
-            _enc_long(len(b), out)
-            out.extend(b)
-        return enc_str
+        return lambda v, out: _enc_bytes(str(v).encode("utf-8"), out)
     if base == "bytes":
-        def enc_bytes(v, out):
-            b = bytes(v)
-            _enc_long(len(b), out)
-            out.extend(b)
-        return enc_bytes
-    raise TypeError(f"unsupported avro type {ft}")
+        return lambda v, out: _enc_bytes(bytes(v), out)
+    raise TypeError(f"unsupported avro type {t}")
 
 
-def _decoder(ft, session_tz: str = "UTC"):
-    base = _base_type(ft)
-    logical = ft.get("logicalType") if isinstance(ft, dict) else None
+def _decoder(t):
+    """Compile ``dec(buf, pos) -> (value, pos)`` for Avro schema ``t``;
+    the inverse of ``_encoder`` (records decode to dicts, unions by
+    branch index)."""
+    if isinstance(t, list):
+        branches = [_decoder(b) for b in t]
 
-    if base in ("long", "int"):
-        if logical == "date":
-            import datetime as dt
+        def dec_union(buf, pos):
+            i, pos = _dec_long(buf, pos)
+            return branches[i](buf, pos)
+        return dec_union
+    base = t["type"] if isinstance(t, dict) else t
+    if base == "record":
+        fields = [(f["name"], _decoder(f["type"])) for f in t["fields"]]
 
-            def dec_date(buf, pos):
+        def dec_record(buf, pos):
+            rec = {}
+            for name, dec in fields:
+                rec[name], pos = dec(buf, pos)
+            return rec, pos
+        return dec_record
+    if base == "array":
+        dec_item = _decoder(t["items"])
+
+        def dec_array(buf, pos):
+            items = []
+            while True:
                 n, pos = _dec_long(buf, pos)
-                return dt.date.fromordinal(n + _EPOCH_DAYS), pos
-            return dec_date
-        if logical == "timestamp-micros":
-            import datetime as dt
-            from zoneinfo import ZoneInfo
-
-            tzinfo = ZoneInfo(session_tz)
-            epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
-
-            def dec_instant(buf, pos):
-                n, pos = _dec_long(buf, pos)
-                t = epoch + dt.timedelta(microseconds=n)
-                return t.astimezone(tzinfo).replace(tzinfo=None), pos
-            return dec_instant
-        if logical == "local-timestamp-micros":
-            import datetime as dt
-
-            def dec_ts(buf, pos):
-                n, pos = _dec_long(buf, pos)
-                return dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=n), pos
-            return dec_ts
+                if n == 0:
+                    return items, pos
+                if n < 0:  # negative count form: |n| items preceded by a size
+                    n = -n
+                    _, pos = _dec_long(buf, pos)
+                for _ in range(n):
+                    item, pos = dec_item(buf, pos)
+                    items.append(item)
+        return dec_array
+    if base == "null":
+        return lambda buf, pos: (None, pos)
+    if base in ("int", "long"):
         return _dec_long
     if base == "double":
         return lambda buf, pos: (struct.unpack_from("<d", buf, pos)[0], pos + 8)
@@ -210,77 +233,212 @@ def _decoder(ft, session_tz: str = "UTC"):
     if base == "boolean":
         return lambda buf, pos: (bool(buf[pos]), pos + 1)
     if base == "string":
-        def dec_str(buf, pos):
-            n, pos = _dec_long(buf, pos)
-            return bytes(buf[pos : pos + n]).decode("utf-8"), pos + n
-        return dec_str
+        return _dec_str
     if base == "bytes":
-        def dec_bytes(buf, pos):
-            n, pos = _dec_long(buf, pos)
-            return bytes(buf[pos : pos + n]), pos + n
-        return dec_bytes
-    raise TypeError(f"unsupported avro type {ft}")
+        return _dec_bytes
+    raise TypeError(f"unsupported avro type {t}")
 
 
-def _field_encoders(avro_sch: dict, session_tz: str = "UTC"):
-    """Per-field encoders. Nullable fields map pandas' null sentinels
-    (None / NaN / NaT, all of which fail ``v == v``) to the union's null
-    branch — the standard pandas<->SQL convention (a float column cannot
-    distinguish NULL from NaN once it has passed through pandas).
-    Non-nullable float fields encode NaN as an IEEE NaN (a legal Avro
-    double); substituting null there would corrupt a non-union stream."""
-    encs = []
-    for f in avro_sch["fields"]:
-        ft = f["type"]
-        if isinstance(ft, list):  # ["null", T]
-            inner = _encoder(ft[1], session_tz)
-
-            def enc(v, out, _inner=inner):
-                if v is None or v != v:  # None / NaN / NaT -> null branch
-                    _enc_long(0, out)
-                else:
-                    _enc_long(1, out)
-                    _inner(v, out)
-            encs.append(enc)
-        else:
-            encs.append(_encoder(ft, session_tz))
-    return encs
+# --------------------------------------------------------------------------
+# container file: one header writer, one block framer, one reader
+# --------------------------------------------------------------------------
 
 
-def _field_decoders(avro_sch: dict, session_tz: str = "UTC"):
-    decs = []
-    for f in avro_sch["fields"]:
-        ft = f["type"]
-        if isinstance(ft, list):
-            inner = _decoder(ft[1], session_tz)
-
-            def dec(buf, pos, _inner=inner):
-                branch, pos = _dec_long(buf, pos)
-                if branch == 0:
-                    return None, pos
-                return _inner(buf, pos)
-            decs.append(dec)
-        else:
-            decs.append(_decoder(ft, session_tz))
-    return decs
-
-
-def _header(avro_sch: dict, sync: bytes) -> bytes:
+def _header(avro_sch: dict, sync: bytes, meta: dict | None = None) -> bytes:
+    """Magic, the metadata map (schema, ``null`` codec, then ``meta``'s
+    entries, str values UTF-8 encoded) and the sync marker."""
+    entries = {"avro.schema": json.dumps(avro_sch).encode(), "avro.codec": b"null"}
+    for k, v in (meta or {}).items():
+        entries[k] = v.encode() if isinstance(v, str) else v
     out = bytearray(MAGIC)
-    meta = {
-        "avro.schema": json.dumps(avro_sch).encode(),
-        "avro.codec": b"null",
-    }
-    _enc_long(len(meta), out)
-    for k, v in meta.items():
-        kb = k.encode()
-        _enc_long(len(kb), out)
-        out.extend(kb)
-        _enc_long(len(v), out)
-        out.extend(v)
+    _enc_long(len(entries), out)
+    for k, v in entries.items():
+        _enc_bytes(k.encode(), out)
+        _enc_bytes(v, out)
     _enc_long(0, out)  # map terminator
     out.extend(sync)
     return bytes(out)
+
+
+def _block(n_records: int, body: bytes, sync: bytes) -> bytes:
+    out = bytearray()
+    _enc_long(n_records, out)
+    _enc_long(len(body), out)
+    out.extend(body)
+    out.extend(sync)
+    return bytes(out)
+
+
+def _write_avro(path, avro_sch: dict, records: list, meta: dict | None = None) -> int:
+    """Write ``records`` (raw values, see ``_encoder``) as a one-block
+    container file with extra metadata entries ``meta``; returns its
+    length. Driver-side: Iceberg manifests and manifest lists are
+    metadata-sized."""
+    sync = uuid.uuid4().bytes
+    enc = _encoder(avro_sch)
+    body = bytearray()
+    for r in records:
+        enc(r, body)
+    data = _header(avro_sch, sync, meta) + _block(len(records), body, sync)
+    Path(path).write_bytes(data)
+    return len(data)
+
+
+def _read_avro_with_meta(src, decoder=_decoder) -> tuple[list, dict]:
+    """Container file (a path or a binary file object) -> (records, the
+    file's metadata map of bytes values). ``decoder`` compiles the record
+    decoder from the file's schema. Raises ValueError on a codec other
+    than ``null`` and on any block whose sync marker does not match."""
+    data = src.read() if hasattr(src, "read") else Path(src).read_bytes()
+    buf = memoryview(data)
+    if bytes(buf[:4]) != MAGIC:
+        raise ValueError(f"not an Avro container file: {src}")
+    pos = 4
+    meta: dict[str, bytes] = {}
+    while True:
+        count, pos = _dec_long(buf, pos)
+        if count == 0:
+            break
+        if count < 0:  # spec: negative count -> block byte size follows
+            count = -count
+            _, pos = _dec_long(buf, pos)
+        for _ in range(count):
+            key, pos = _dec_str(buf, pos)
+            meta[key], pos = _dec_bytes(buf, pos)
+    if meta.get("avro.codec", b"null") != b"null":
+        raise ValueError(f"{src}: unsupported codec {meta['avro.codec']!r}")
+    dec = decoder(json.loads(meta["avro.schema"]))
+    sync = bytes(buf[pos : pos + 16])
+    pos += 16
+    records: list = []
+    while pos < len(buf):
+        count, pos = _dec_long(buf, pos)
+        _size, pos = _dec_long(buf, pos)
+        for _ in range(count):
+            rec, pos = dec(buf, pos)
+            records.append(rec)
+        if bytes(buf[pos : pos + 16]) != sync:
+            raise ValueError(f"{src}: sync marker mismatch (corrupt block)")
+        pos += 16
+    return records, meta
+
+
+def _read_avro(src) -> list:
+    return _read_avro_with_meta(src)[0]
+
+
+# --------------------------------------------------------------------------
+# the Avro target's value adapters: pandas values <-> raw Avro values
+# --------------------------------------------------------------------------
+
+
+def _to_raw(ft, session_tz: str):
+    """pandas value -> raw Avro value for one non-union field type, or
+    None when the value needs no change.
+
+    ``timestamp-micros`` is a UTC INSTANT per the spec, but pandas hands
+    executor code session-local NAIVE timestamps — so the adapter
+    localizes to ``session_tz`` before taking the epoch value; writing
+    from a non-UTC session would otherwise shift every instant by the
+    zone offset (only self-round-trips would cancel the error).
+    ``local-timestamp-micros`` (NTZ) is zone-free and stays naive."""
+    logical = ft.get("logicalType") if isinstance(ft, dict) else None
+    if logical == "date":
+        return lambda v: v.toordinal() - _EPOCH_DAYS
+    if logical == "timestamp-micros":
+        from zoneinfo import ZoneInfo
+
+        tzinfo = ZoneInfo(session_tz)
+
+        def instant(v):
+            # DST policy mirrors the JVM: ambiguous wall times take the
+            # EARLIER offset (summer time), spring-forward gaps shift
+            # forward — tz_localize would otherwise raise mid-job on
+            # data Spark itself accepts
+            ts = (
+                v
+                if v.tzinfo is not None
+                else v.tz_localize(tzinfo, ambiguous=True, nonexistent="shift_forward")
+            )
+            return ts.value // 1000  # aware .value = UTC ns
+        return instant
+    if logical == "local-timestamp-micros":
+        return lambda v: v.value // 1000  # pd ns -> us
+    return None
+
+
+def _from_raw(ft, session_tz: str):
+    """Raw Avro value -> Python value for one non-union field type, or
+    None when the raw value is the Python value."""
+    import datetime as dt
+
+    logical = ft.get("logicalType") if isinstance(ft, dict) else None
+    if logical == "date":
+        return lambda n: dt.date.fromordinal(n + _EPOCH_DAYS)
+    if logical == "timestamp-micros":
+        from zoneinfo import ZoneInfo
+
+        tzinfo = ZoneInfo(session_tz)
+        epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+        return lambda n: (
+            (epoch + dt.timedelta(microseconds=n)).astimezone(tzinfo).replace(tzinfo=None)
+        )
+    if logical == "local-timestamp-micros":
+        return lambda n: dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=n)
+    return None
+
+
+def _field_encoders(avro_sch: dict, session_tz: str = "UTC"):
+    """Per-field encoders of pandas values. Nullable fields map pandas'
+    null sentinels (None / NaN / NaT, all of which fail ``v == v``) to
+    the union's null branch — the standard pandas<->SQL convention (a
+    float column cannot distinguish NULL from NaN once it has passed
+    through pandas). Non-nullable float fields encode NaN as an IEEE NaN
+    (a legal Avro double); substituting null there would corrupt a
+    non-union stream."""
+    encs = []
+    for f in avro_sch["fields"]:
+        ft = f["type"]
+        nullable = isinstance(ft, list)  # ["null", T]
+        enc = _encoder(ft)
+        raw = _to_raw(ft[1] if nullable else ft, session_tz)
+        if nullable:
+            def enc_field(v, out, _enc=enc, _raw=raw):
+                if v is None or v != v:
+                    v = None
+                elif _raw is not None:
+                    v = _raw(v)
+                _enc(v, out)
+        elif raw is not None:
+            def enc_field(v, out, _enc=enc, _raw=raw):
+                _enc(_raw(v), out)
+        else:
+            enc_field = enc
+        encs.append(enc_field)
+    return encs
+
+
+def _row_decoder(avro_sch: dict, session_tz: str = "UTC"):
+    """Decoder of one record as a tuple of Python values."""
+    decs = []
+    for f in avro_sch["fields"]:
+        ft = f["type"]
+        dec = _decoder(ft)
+        py = _from_raw(ft[1] if isinstance(ft, list) else ft, session_tz)
+        if py is not None:
+            def dec_field(buf, pos, _dec=dec, _py=py):
+                v, pos = _dec(buf, pos)
+                return (None if v is None else _py(v)), pos
+            dec = dec_field
+        decs.append(dec)
+
+    def dec_row(buf, pos):
+        vals = []
+        for dec in decs:
+            v, pos = dec(buf, pos)
+            vals.append(v)
+        return tuple(vals), pos
+    return dec_row
 
 
 # --------------------------------------------------------------------------
@@ -376,12 +534,7 @@ def write_avro(
                 for enc, v in zip(encs, tup):
                     enc(v, block)  # null/NaN policy lives in the encoder
                 rows += 1
-            head = bytearray()
-            _enc_long(rows, head)
-            _enc_long(len(block), head)
-            fh.write(head)
-            fh.write(block)
-            fh.write(sync)
+            fh.write(_block(rows, block, sync))
             n += rows
         if fh is not None:
             fh.close()
@@ -392,48 +545,11 @@ def write_avro(
 
 
 def decode_avro_file(fp, session_tz: str = "UTC") -> tuple[dict, list[tuple]]:
-    """Decode one Avro container file -> (schema, rows). Pure python; used
-    executor-side by ``read_avro`` and directly by tests."""
-    data = fp.read() if hasattr(fp, "read") else open(fp, "rb").read()
-    buf = memoryview(data)
-    if bytes(buf[:4]) != MAGIC:
-        raise ValueError("not an Avro container file")
-    pos = 4
-    meta: dict[str, bytes] = {}
-    while True:
-        count, pos = _dec_long(buf, pos)
-        if count == 0:
-            break
-        if count < 0:  # spec: negative count -> block byte size follows
-            count = -count
-            _, pos = _dec_long(buf, pos)
-        for _ in range(count):
-            klen, pos = _dec_long(buf, pos)
-            key = bytes(buf[pos : pos + klen]).decode()
-            pos += klen
-            vlen, pos = _dec_long(buf, pos)
-            meta[key] = bytes(buf[pos : pos + vlen])
-            pos += vlen
-    if meta.get("avro.codec", b"null") != b"null":
-        raise ValueError(f"unsupported codec {meta['avro.codec']!r}")
-    avro_sch = json.loads(meta["avro.schema"])
-    sync = bytes(buf[pos : pos + 16])
-    pos += 16
-    decs = _field_decoders(avro_sch, session_tz)
-    rows: list[tuple] = []
-    while pos < len(buf):
-        count, pos = _dec_long(buf, pos)
-        _size, pos = _dec_long(buf, pos)
-        for _ in range(count):
-            vals = []
-            for dec in decs:
-                v, pos = dec(buf, pos)
-                vals.append(v)
-            rows.append(tuple(vals))
-        if bytes(buf[pos : pos + 16]) != sync:
-            raise ValueError("sync marker mismatch (corrupt block)")
-        pos += 16
-    return avro_sch, rows
+    """Decode one Avro container file -> (schema, rows as tuples of
+    Python values). Pure python; used executor-side by ``read_avro`` and
+    directly by tests."""
+    rows, meta = _read_avro_with_meta(fp, lambda sch: _row_decoder(sch, session_tz))
+    return json.loads(meta["avro.schema"]), rows
 
 
 def read_avro(

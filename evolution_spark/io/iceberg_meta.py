@@ -15,13 +15,12 @@ snapshot-write surface the same way ``io/delta_log.py`` does for Delta:
   (``<uuid>-m0.avro``) listing the data files, and the snapshot's
   manifest list (``snap-<id>-1-<uuid>.avro``) — all metadata-sized.
 
-Manifests are Avro object-container files per the spec; the records are
-nested (``manifest_entry.data_file.partition``), which the flat
-row-codec in ``io/avro.py`` does not model, so this module carries a
-small recursive generic Avro encoder/decoder for arbitrary
-record/union schemas (primitives + nested records are all the manifest
-schemas need). Byte-level validity is cross-checked in tests with the
-JVM's own ``org.apache.avro.file.DataFileReader``.
+Manifests are Avro object-container files per the spec, written and
+read with ``io/avro.py``'s codec on raw values (nested records such as
+``manifest_entry.data_file.partition``, arrays, ``[null, T]`` unions; a
+partition ``date`` is its int day count). Byte-level validity is
+cross-checked in tests with the JVM's own
+``org.apache.avro.file.DataFileReader``.
 
 Spark's plain parquet writer does not embed Iceberg field-ids in the
 files, so the table metadata carries ``schema.name-mapping.default``
@@ -51,7 +50,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from evolution_spark.io.avro import MAGIC, _dec_long, _enc_long
+from evolution_spark.io.avro import _read_avro, _read_avro_with_meta, _write_avro
 from evolution_spark.io.iceberg_transforms import (
     parse_partition_by,
     resolve_partition_where,
@@ -116,166 +115,6 @@ def spark_schema_of(ice: dict) -> T.StructType:
             for f in ice["fields"]
         ]
     )
-
-
-# --------------------------------------------------------------------------
-# generic Avro value codec (recursive: records / unions / primitives) —
-# manifests need nested records, which io/avro.py's flat row codec doesn't
-# --------------------------------------------------------------------------
-
-
-def _enc_value(ftype, v, out: bytearray) -> None:
-    if isinstance(ftype, list):  # union, iceberg manifests only use [null, T]
-        if v is None:
-            _enc_long(ftype.index("null"), out)
-            return
-        branch = 1 if ftype[0] == "null" else 0
-        _enc_long(branch, out)
-        _enc_value(ftype[branch], v, out)
-        return
-    base = ftype["type"] if isinstance(ftype, dict) else ftype
-    if base == "record":
-        for f in ftype["fields"]:
-            _enc_value(f["type"], v[f["name"]], out)
-    elif base in ("int", "long"):
-        _enc_long(int(v), out)
-    elif base == "string":
-        b = str(v).encode("utf-8")
-        _enc_long(len(b), out)
-        out.extend(b)
-    elif base == "bytes":
-        b = bytes(v)
-        _enc_long(len(b), out)
-        out.extend(b)
-    elif base == "boolean":
-        out.append(1 if v else 0)
-    elif base == "double":
-        import struct as _s
-
-        out.extend(_s.pack("<d", float(v)))
-    elif base == "float":
-        import struct as _s
-
-        out.extend(_s.pack("<f", float(v)))
-    elif base == "array":
-        # avro arrays: one block of n items, then the 0 terminator
-        items = list(v)
-        if items:
-            _enc_long(len(items), out)
-            for item in items:
-                _enc_value(ftype["items"], item, out)
-        _enc_long(0, out)
-    else:
-        raise TypeError(f"unsupported avro type {ftype}")
-
-
-def _dec_value(ftype, buf, pos: int):
-    if isinstance(ftype, list):
-        branch, pos = _dec_long(buf, pos)
-        if ftype[branch] == "null":
-            return None, pos
-        return _dec_value(ftype[branch], buf, pos)
-    base = ftype["type"] if isinstance(ftype, dict) else ftype
-    if base == "record":
-        rec = {}
-        for f in ftype["fields"]:
-            rec[f["name"]], pos = _dec_value(f["type"], buf, pos)
-        return rec, pos
-    if base in ("int", "long"):
-        return _dec_long(buf, pos)
-    if base == "string":
-        n, pos = _dec_long(buf, pos)
-        return bytes(buf[pos : pos + n]).decode("utf-8"), pos + n
-    if base == "bytes":
-        n, pos = _dec_long(buf, pos)
-        return bytes(buf[pos : pos + n]), pos + n
-    if base == "boolean":
-        return bool(buf[pos]), pos + 1
-    if base == "double":
-        import struct as _s
-
-        return _s.unpack_from("<d", buf, pos)[0], pos + 8
-    if base == "float":
-        import struct as _s
-
-        return _s.unpack_from("<f", buf, pos)[0], pos + 4
-    if base == "array":
-        items = []
-        while True:
-            n, pos = _dec_long(buf, pos)
-            if n == 0:
-                break
-            if n < 0:  # negative count form: |n| items preceded by a size
-                n = -n
-                _, pos = _dec_long(buf, pos)
-            for _ in range(n):
-                item, pos = _dec_value(ftype["items"], buf, pos)
-                items.append(item)
-        return items, pos
-    raise TypeError(f"unsupported avro type {ftype}")
-
-
-def _write_avro(path: Path, schema: dict, records: list[dict], meta: dict) -> int:
-    """One-block Avro container file (driver-side: manifests are
-    metadata-sized — one record per data file / per manifest)."""
-    sync = uuid.uuid4().bytes
-    out = bytearray(MAGIC)
-    entries = {"avro.schema": json.dumps(schema).encode(), "avro.codec": b"null"}
-    entries.update({k: v.encode() if isinstance(v, str) else v for k, v in meta.items()})
-    _enc_long(len(entries), out)
-    for k, v in entries.items():
-        kb = k.encode()
-        _enc_long(len(kb), out)
-        out.extend(kb)
-        _enc_long(len(v), out)
-        out.extend(v)
-    _enc_long(0, out)
-    out.extend(sync)
-    body = bytearray()
-    for r in records:
-        _enc_value(schema, r, body)
-    _enc_long(len(records), out)
-    _enc_long(len(body), out)
-    out.extend(body)
-    out.extend(sync)
-    path.write_bytes(bytes(out))
-    return len(out)
-
-
-def _read_avro(path: Path) -> list[dict]:
-    return _read_avro_with_meta(path)[0]
-
-
-def _read_avro_with_meta(path: Path) -> tuple[list[dict], dict]:
-    """Avro file -> (records, file-metadata map). The metadata carries
-    the manifest's ``schema-id`` — what lets the reader resolve files
-    written under OLDER schemas (rename/widen evolution) by field id."""
-    buf = memoryview(path.read_bytes())
-    assert bytes(buf[:4]) == MAGIC, f"not an avro file: {path}"
-    pos = 4
-    n_meta, pos = _dec_long(buf, pos)
-    meta = {}
-    while n_meta:
-        if n_meta < 0:
-            # spec: a negative block count is followed by the block's byte
-            # size (which we don't need, but MUST consume to stay in sync)
-            _, pos = _dec_long(buf, pos)
-        for _ in range(abs(n_meta)):
-            k, pos = _dec_value("string", buf, pos)
-            v, pos = _dec_value("bytes", buf, pos)
-            meta[k] = v
-        n_meta, pos = _dec_long(buf, pos)
-    schema = json.loads(meta["avro.schema"])
-    pos += 16  # sync
-    records: list[dict] = []
-    while pos < len(buf):
-        n_rec, pos = _dec_long(buf, pos)
-        _, pos = _dec_long(buf, pos)  # block byte length
-        for _ in range(abs(n_rec)):
-            rec, pos = _dec_value(schema, buf, pos)
-            records.append(rec)
-        pos += 16  # sync
-    return records, meta
 
 
 # --------------------------------------------------------------------------

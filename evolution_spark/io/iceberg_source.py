@@ -55,10 +55,10 @@ def _plan_iceberg_slices(
     import pyarrow.parquet as papq
 
     from evolution_spark.io.deletion_vectors import serialize_roaring64
+    from evolution_spark.io.avro import _read_avro, _read_avro_with_meta
     from evolution_spark.io.iceberg_meta import (
         IcebergFormatError,
         _load_metadata,
-        _read_avro,
         spark_schema_of,
     )
 
@@ -126,8 +126,6 @@ def _plan_iceberg_slices(
     data_entries: list[tuple[dict, int]] = []  # (data_file, schema-id)
     delete_files: list[str] = []
     dv_entries: list[dict] = []  # v3 Puffin deletion-vector placements
-    from evolution_spark.io.iceberg_meta import _read_avro_with_meta
-
     for mf in _read_avro(Path(snapshot["manifest-list"])):
         is_delete_manifest = int(mf.get("content") or 0) == 1
         mf_spec = int(mf.get("partition_spec_id") or 0)
@@ -376,7 +374,7 @@ class _IcebergStreamReader(DataSourceStreamReader):
         }
 
     def partitions(self, start, end):
-        from evolution_spark.io.iceberg_meta import _read_avro
+        from evolution_spark.io.avro import _read_avro
 
         metadata = self._metadata()
         if metadata["current-schema-id"] != self._pinned_schema_id:

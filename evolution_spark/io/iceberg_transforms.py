@@ -4,16 +4,18 @@ The reference's Iceberg target declares partitioned writes but implements
 none of the spec's transform family (crates/evolution-target/src/target.rs);
 this module implements the v2 transform set the way a Spark engine should:
 
-- the TRANSFORM COLUMN is computed with built-in JVM expressions wherever
-  the spec's function is expressible: truncate, year/month/day/hour, AND
-  ``bucket[N]`` over integral sources (int/long/date/timestamp[tz]) —
-  the spec pins Murmur3-x86-32 over the type's single-value
-  serialization, which Spark's built-in ``hash()`` (seed 42,
-  Spark-specific encoding) does NOT match, so the two 4-byte mixing
-  rounds + finalization are spelled out as masked BIGINT/DECIMAL
-  arithmetic that whole-stage codegens (zero Python in any write hot
-  path). Only ``bucket`` over STRINGS keeps an Arrow-batched pandas UDF
-  (variable-length byte hashing has no built-in expression form);
+- the TRANSFORM COLUMN (``with_transform_column``) is computed with
+  built-in JVM expressions wherever the spec's function is expressible:
+  truncate, year/month/day/hour, AND ``bucket[N]`` over integral sources
+  (int/long/date/timestamp[tz]) — the spec pins Murmur3-x86-32 over the
+  type's single-value serialization, which Spark's built-in ``hash()``
+  (seed 42, Spark-specific encoding) does NOT match, so the two 4-byte
+  mixing rounds + finalization are spelled out as masked BIGINT
+  arithmetic, staged through narrow projections so the write plan stays
+  in whole-stage codegen (zero Python in any write hot path). Only
+  ``bucket`` over STRINGS keeps an Arrow-batched pandas UDF
+  (variable-length byte hashing has no built-in expression form); the
+  pure-Python ``bucket_hash`` is the reference both are tested against;
 - hive-style dir layout comes free from ``partitionBy`` on the computed
   column: source columns STAY in the data files (unlike identity
   partitioning, a transform is lossy, so the reader never reconstructs the
@@ -44,7 +46,6 @@ __all__ = [
     "bucket_hash",
     "parse_partition_by",
     "result_ice_type",
-    "transform_column",
     "transform_literal",
     "with_transform_column",
     "partition_field_name",
@@ -214,11 +215,11 @@ def _transform_arg(transform: str) -> int:
     return int(transform.partition("[")[2].rstrip("]"))
 
 
-def transform_column(transform: str, col_name: str, source_type: str):
-    """Spark Column computing the transform of ``col_name`` — built-in
-    JVM expressions for everything except ``bucket`` over strings (the
-    one Arrow-batched pandas UDF left; integral buckets codegen via
-    ``_bucket_int_expr``)."""
+def _transform_column(transform: str, col_name: str, source_type: str):
+    """Spark Column computing the transform of ``col_name`` for every
+    transform but the integral ``bucket`` (``with_transform_column``
+    stages that one) — built-in JVM expressions, except ``bucket`` over
+    strings: the one Arrow-batched pandas UDF."""
     from pyspark.sql import functions as F
 
     c = F.col(col_name)
@@ -253,75 +254,16 @@ def transform_column(transform: str, col_name: str, source_type: str):
             ).cast("int")
         return F.floor(F.unix_micros(c) / F.lit(3_600_000_000)).cast("int")
     if base == "bucket":
-        n = _transform_arg(transform)
-        if source_type in _INTEGRAL:
-            # pure JVM expression (whole-stage codegen, zero Python in
-            # the write hot path): Murmur3-x86-32 over the 8-byte LE
-            # value as masked BIGINT arithmetic
-            return _bucket_int_expr(c, source_type, n).alias(
-                f"{col_name}_bucket"
-            )
-        return _bucket_udf(source_type, n)(c).alias(f"{col_name}_bucket")
+        return _bucket_udf(source_type, _transform_arg(transform))(c)
     raise ValueError(f"unknown partition transform {transform!r}")
 
 
-def _mul32_col(col, const: int):
-    """(col * const) mod 2^32, ANSI-safe via DECIMAL(38) — the 32-bit
-    multiply of the single-Column Murmur3 form (``_bucket_int_expr``).
-    DECIMAL here is deliberate: this form's trees have no subexpression
-    sharing, so the 16x32 BIGINT split (which must reference ``col``
-    TWICE — see the staged lane's ``mul32`` in ``with_transform_column``)
-    doubles the subtree per use and blows the nested hash up
-    exponentially (r16: tried it, the spec-vector test went 100 s ->
-    360 s in pure plan analysis). The hot write path does not come
-    through here — ``with_transform_column`` stages through attributes
-    and uses the cheap split form."""
-    from pyspark.sql import functions as F
-
-    return F.pmod(
-        col.cast("decimal(20,0)") * F.lit(const).cast("decimal(20,0)"),
-        F.lit(4294967296).cast("decimal(20,0)"),
-    ).cast("long")
-
-
-def _rotl_col(col, r: int):
-    from pyspark.sql import functions as F
-
-    return (
-        F.shiftleft(col, r).bitwiseOR(F.shiftright(col, 32 - r))
-    ).bitwiseAND(F.lit(0xFFFFFFFF))
-
-
-def _int_value_expr(c, source_type: str):
-    """The integral source's 8-byte-value widening as a BIGINT Column —
-    shared by both JVM bucket forms so the NTZ micros formula can never
-    drift between them. NTZ avoids unix_micros (refuses TIMESTAMP_NTZ)
-    and session-zone casts by building micros from tz-free calendar
-    components (extract(SECOND) carries the fraction)."""
-    from pyspark.sql import functions as F
-
-    if source_type == "date":
-        return F.datediff(c, F.lit("1970-01-01")).cast("long")
-    if source_type == "timestamp":
-        days = F.datediff(F.to_date(c), F.lit("1970-01-01")).cast("long")
-        secs = (
-            days * F.lit(86_400)
-            + F.hour(c).cast("long") * F.lit(3_600)
-            + F.minute(c).cast("long") * F.lit(60)
-        )
-        return secs * F.lit(1_000_000) + (
-            F.extract(F.lit("SECOND"), c) * F.lit(1_000_000)
-        ).cast("long")
-    if source_type == "timestamptz":
-        return F.unix_micros(c)
-    return c.cast("long")
-
-
 def _int_value_sql(qc: str, source_type: str) -> str:
-    """SQL-string twin of ``_int_value_expr`` for the lateral-alias
-    staged bucket lane — same widening arithmetic per source type, kept
-    adjacent so the two forms cannot drift (the Column form remains the
-    one ``_bucket_int_expr`` uses)."""
+    """The integral source's 8-byte-value widening as BIGINT SQL over
+    the quoted column ``qc``, for the staged bucket lane. NTZ avoids
+    unix_micros (refuses TIMESTAMP_NTZ) and session-zone casts by
+    building micros from tz-free calendar components (extract(SECOND)
+    carries the fraction)."""
     if source_type == "date":
         return f"CAST(datediff({qc}, '1970-01-01') AS BIGINT)"
     if source_type == "timestamp":
@@ -341,23 +283,24 @@ def _int_value_sql(qc: str, source_type: str) -> str:
 
 def with_transform_column(df, out_name: str, transform: str,
                           col_name: str, source_type: str):
-    """``df.withColumn(out_name, transform)`` with the integral-bucket
-    lane STAGED through ~15 narrow projections: each Murmur3 step lands
-    in its own temp column, so every expression references prior
-    ATTRIBUTES (leaves) and the trees stay LINEAR. The single-Column
-    form (``_bucket_int_expr``) is correct but its rotl/xor-shift
-    doublings build a tree large enough to fall out of whole-stage
-    codegen inside WRITE plans — interpreted eval then re-walks the
-    duplicated subtrees per row (measured 10x on the partitioned-write
-    bench line). Catalyst's CollapseProject keeps the staging (it
-    refuses to inline non-cheap expressions referenced twice), and what
-    it does inline is single-use, i.e. still linear."""
+    """``df.withColumn(out_name, transform)``, the one way a transform
+    column is built. Integral ``bucket[N]`` (Murmur3-x86-32 of the value's
+    8-byte little-endian serialization, Appendix B) is STAGED through
+    ~20 narrow projections: each Murmur3 step lands in its own temp
+    column, so every expression references prior ATTRIBUTES (leaves) and
+    the trees stay LINEAR. A single-Column tree of the same hash is
+    correct, but its rotl/xor-shift doublings build a tree large enough
+    to fall out of whole-stage codegen inside WRITE plans — interpreted
+    eval then re-walks the duplicated subtrees per row (measured 10x on
+    the partitioned-write bench line). Catalyst's CollapseProject keeps
+    the staging (it refuses to inline non-cheap expressions referenced
+    twice), and what it does inline is single-use, i.e. still linear."""
     from pyspark.sql import functions as F
 
     base = transform.split("[", 1)[0]
     if base != "bucket" or source_type not in _INTEGRAL:
         return df.withColumn(
-            out_name, transform_column(transform, col_name, source_type)
+            out_name, _transform_column(transform, col_name, source_type)
         )
     n = _transform_arg(transform)
     # temp names stay bare identifiers whatever out_name holds, so the
@@ -372,8 +315,10 @@ def with_transform_column(df, out_name: str, transform: str,
     # ~150 (r16 cProfile: with_transform_column was 0.5 s of the
     # partitioned-write build, all socket wait)
     def mul32(x: str, const: int) -> str:
-        # 16x32 split in pure BIGINT (see _mul32_col): intermediates stay
-        # under 2^49 (ANSI-safe), ~80x cheaper per row than DECIMAL pmod
+        # (x * const) mod 2^32 as a 16x32 split in pure BIGINT:
+        # intermediates stay under 2^49 (ANSI-safe), ~80x cheaper per row
+        # than DECIMAL pmod. It references x twice, which is cheap only
+        # because x is a staged attribute, not a subtree
         return (
             f"((({x} & 65535) * {const} "
             f"+ shiftleft((shiftright({x}, 16) * {const}) & 65535, 16)) "
@@ -418,99 +363,12 @@ def with_transform_column(df, out_name: str, transform: str,
     return df.withColumn(out_name, F.col(f"{t}_out")).drop(*[name for name, _ in stages])
 
 
-def _bucket_int_expr(c, source_type: str, n: int):
-    """Spec-exact ``bucket[N]`` for integral sources as a BUILT-IN
-    expression tree: Murmur3-x86-32 of the value's 8-byte little-endian
-    serialization (two 4-byte mixing rounds + finalization, Appendix B),
-    computed entirely in masked BIGINT arithmetic so it whole-stage
-    codegens AND stays ANSI-safe (no 64-bit overflow anywhere: 32-bit
-    multiplies are split 16x32 and masked before the <<16 recombine).
-    This replaces the pandas-UDF lane for int/long/date/timestamp —
-    the LAST Python in any write hot path; strings keep the Arrow UDF
-    (variable-length byte hashing has no built-in expression form)."""
-    from pyspark.sql import functions as F
-
-    m = F.lit(0xFFFFFFFF)
-    mul32, rotl = _mul32_col, _rotl_col
-    v = _int_value_expr(c, source_type)
-    # two's-complement 8-byte LE halves as unsigned 32-bit lanes
-    k1 = v.bitwiseAND(m)
-    k2 = F.shiftrightunsigned(v, 32).bitwiseAND(m)
-    h = F.lit(0).cast("long")
-    for k in (k1, k2):
-        k = mul32(k, _M3_C1)
-        k = rotl(k, 15)
-        k = mul32(k, _M3_C2)
-        h = h.bitwiseXOR(k)
-        h = rotl(h, 13)
-        h = (mul32(h, 5) + F.lit(0xE6546B64)).bitwiseAND(m)
-    h = h.bitwiseXOR(F.lit(8))  # length of the serialized value
-    h = h.bitwiseXOR(F.shiftright(h, 16))
-    h = mul32(h, 0x85EBCA6B)
-    h = h.bitwiseXOR(F.shiftright(h, 13))
-    h = mul32(h, 0xC2B2AE35)
-    h = h.bitwiseXOR(F.shiftright(h, 16))
-    # iceberg bucket: (signed_hash & Integer.MAX_VALUE) % N — identical
-    # to masking the unsigned value to 31 bits
-    bucket = F.pmod(h.bitwiseAND(F.lit(0x7FFFFFFF)), F.lit(n)).cast("int")
-    return F.when(c.isNull(), F.lit(None).cast("int")).otherwise(bucket)
-
-
 def _bucket_udf(source_type: str, n: int):
-    """Arrow-batched bucket UDF. Integral sources vectorize the whole
-    Murmur3 over numpy uint32 lanes (8-byte LE value = two 4-byte blocks,
-    fully branch-free); strings hash per value (bytes vary in length) but
-    still move via Arrow batches, not per-row pickling."""
+    """Arrow-batched ``bucket[N]`` UDF for string/binary sources: hashes
+    per value (bytes vary in length) with the ``bucket_hash`` reference,
+    but still moves values via Arrow batches, not per-row pickling."""
     import pandas as pd
     from pyspark.sql import functions as F
-
-    if source_type in _INTEGRAL:
-
-        @F.pandas_udf("int")
-        def _bucket(s: pd.Series) -> pd.Series:
-            import numpy as np
-
-            if source_type == "date":
-                vals = s.map(
-                    lambda d: None if d is None else d.toordinal() - 719163
-                )
-            elif source_type in ("timestamp", "timestamptz"):
-                # pandas surfaces timestamps as datetime64[ns|us]; to
-                # spec micros
-                vals = pd.Series(s.values.astype("datetime64[us]").astype("int64"), index=s.index)
-                vals = vals.where(~s.isna(), None)
-            else:
-                vals = s
-            mask = vals.isna()
-            v = (
-                pd.to_numeric(vals.fillna(0), errors="raise")
-                .astype("int64")
-                .to_numpy()
-                .astype(np.uint64)
-            )
-            k1 = (v & np.uint64(0xFFFFFFFF)).astype(np.uint32)
-            k2 = (v >> np.uint64(32)).astype(np.uint32)
-            h = np.zeros(len(v), np.uint32)
-            with np.errstate(over="ignore"):
-                for k in (k1, k2):
-                    k = k * np.uint32(_M3_C1)
-                    k = (k << np.uint32(15)) | (k >> np.uint32(17))
-                    k = k * np.uint32(_M3_C2)
-                    h = h ^ k
-                    h = (h << np.uint32(13)) | (h >> np.uint32(19))
-                    h = h * np.uint32(5) + np.uint32(0xE6546B64)
-                h = h ^ np.uint32(8)  # len(8-byte value)
-                h = h ^ (h >> np.uint32(16))
-                h = h * np.uint32(0x85EBCA6B)
-                h = h ^ (h >> np.uint32(13))
-                h = h * np.uint32(0xC2B2AE35)
-                h = h ^ (h >> np.uint32(16))
-            out = ((h & np.uint32(0x7FFFFFFF)) % np.uint32(n)).astype("int32")
-            res = pd.Series(out, index=s.index, dtype="Int32")
-            res[mask] = None
-            return res
-
-        return _bucket
 
     @F.pandas_udf("int")
     def _bucket_str(s: pd.Series) -> pd.Series:

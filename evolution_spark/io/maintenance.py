@@ -92,11 +92,8 @@ def table_health(path: str) -> dict:
         fix = "optimize_delta(spark, path) then vacuum_delta(path)"
         expire_fix = "vacuum_delta(path, keep_versions=N)"
     elif (table_dir / "metadata").exists():
-        from evolution_spark.io.iceberg_meta import (
-            _load_metadata,
-            _read_avro,
-            _read_avro_with_meta,
-        )
+        from evolution_spark.io.avro import _read_avro, _read_avro_with_meta
+        from evolution_spark.io.iceberg_meta import _load_metadata
 
         fmt = "iceberg"
         metadata, _ = _load_metadata(table_dir)

@@ -906,9 +906,9 @@ def test_iceberg_sink_shards_are_distributed(ice_registered, tmp_path):
     """Plan-shape gate for the sink: each executor task stages its own
     shard (distributed write — no driver-side collect), and the commit
     adds exactly one manifest entry per non-empty shard."""
+    from evolution_spark.io.avro import _read_avro
     from evolution_spark.io.iceberg_meta import (
         _load_metadata,
-        _read_avro,
         write_iceberg_table,
     )
     from pathlib import Path as _P

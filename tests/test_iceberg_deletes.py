@@ -89,7 +89,8 @@ def test_compaction_materializes_deletes(spark, tmp_path):
     got = {r.k for r in read_iceberg_table(spark, path).collect()}
     assert got == set(range(40))
     # post-compaction metadata: current snapshot has NO delete manifests
-    from evolution_spark.io.iceberg_meta import _load_metadata, _read_avro
+    from evolution_spark.io.avro import _read_avro
+    from evolution_spark.io.iceberg_meta import _load_metadata
 
     meta, _ = _load_metadata(Path(path))
     cur = next(s for s in meta["snapshots"]
@@ -117,7 +118,8 @@ def test_malformed_equality_delete_metadata_refused(spark, tmp_path):
     import json
     from pathlib import Path
 
-    from evolution_spark.io.iceberg_meta import _load_metadata, _read_avro, _write_avro
+    from evolution_spark.io.avro import _read_avro, _write_avro
+    from evolution_spark.io.iceberg_meta import _load_metadata
 
     path = str(tmp_path / "eqdel")
     df = spark.range(10).select(F.col("id").alias("k"))

@@ -52,10 +52,9 @@ def test_iceberg_reader_format_guard(spark, tmp_path):
     import pytest
     from pyspark.sql import functions as F
 
+    from evolution_spark.io.avro import _read_avro, _write_avro
     from evolution_spark.io.iceberg_meta import (
         IcebergFormatError,
-        _read_avro,
-        _write_avro,
         read_iceberg_table,
         write_iceberg_table,
         _MANIFEST_LIST_SCHEMA,

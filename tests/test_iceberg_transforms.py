@@ -5,7 +5,7 @@ on transform-partitioned tables.
 Reference parity: the reference's Iceberg target declares partitioned
 writes (crates/evolution-target/src/target.rs) but implements no
 transform; this engine implements the v2 transform family Spark-first
-(JVM expressions + one Arrow-batched bucket UDF)."""
+(JVM expressions + one Arrow-batched string bucket UDF)."""
 
 import datetime as dt
 import shutil
@@ -184,11 +184,10 @@ def test_transform_partitioned_append_update(spark, orders, tmp_path):
 
 
 def test_bucket_udf_matches_driver_side_hash(spark, tmp_path):
-    """The vectorized numpy Murmur3 lanes (executor side) agree with the
-    scalar driver-side bucket on longs, strings, dates, and nulls."""
-    import pandas as pd
-
-    from evolution_spark.io.iceberg_transforms import transform_column
+    """The executor-side buckets (the staged JVM lane for longs and
+    dates, the Arrow UDF for strings) agree with the scalar driver-side
+    bucket on longs, strings, dates, and nulls."""
+    from evolution_spark.io.iceberg_transforms import with_transform_column
 
     rows = [
         (34, "iceberg", dt.date(2017, 11, 16)),
@@ -197,11 +196,10 @@ def test_bucket_udf_matches_driver_side_hash(spark, tmp_path):
         (None, None, None),
     ]
     df = spark.createDataFrame(rows, "k long, s string, d date")
-    out = df.select(
-        transform_column("bucket[16]", "k", "long").alias("bk"),
-        transform_column("bucket[16]", "s", "string").alias("bs"),
-        transform_column("bucket[16]", "d", "date").alias("bd"),
-    ).collect()
+    for name, src, typ in [("bk", "k", "long"), ("bs", "s", "string"),
+                           ("bd", "d", "date")]:
+        df = with_transform_column(df, name, "bucket[16]", src, typ)
+    out = df.select("bk", "bs", "bd").collect()
     for (k, s, d), r in zip(rows, out):
         assert r["bk"] == transform_literal("bucket[16]", k, "long")
         assert r["bs"] == transform_literal("bucket[16]", s, "string")
@@ -248,19 +246,17 @@ def test_integral_bucket_is_pure_jvm_and_spec_exact(spark):
 
     from evolution_spark.io.iceberg_transforms import (
         bucket_hash,
-        transform_column,
+        with_transform_column,
     )
 
     rows = [(34, 34, datetime.date(2017, 11, 16),
              datetime.datetime(2017, 11, 16, 22, 31, 8), None)]
     df = spark.createDataFrame(rows, "i int, l long, d date, ts timestamp, nul long")
-    q = df.select(
-        transform_column("bucket[16]", "i", "int").alias("bi"),
-        transform_column("bucket[16]", "l", "long").alias("bl"),
-        transform_column("bucket[16]", "d", "date").alias("bd"),
-        transform_column("bucket[16]", "ts", "timestamptz").alias("bts"),
-        transform_column("bucket[16]", "nul", "long").alias("bnul"),
-    )
+    for name, src, typ in [("bi", "i", "int"), ("bl", "l", "long"),
+                           ("bd", "d", "date"), ("bts", "ts", "timestamptz"),
+                           ("bnul", "nul", "long")]:
+        df = with_transform_column(df, name, "bucket[16]", src, typ)
+    q = df.select("bi", "bl", "bd", "bts", "bnul")
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan
     out = q.first()
@@ -275,8 +271,8 @@ def test_integral_bucket_is_pure_jvm_and_spec_exact(spark):
         0, -1, 1, 2**31, -2**31,
     ]
     vdf = spark.createDataFrame([(v,) for v in vals], "v long")
-    got = {r.v: r.b for r in vdf.select(
-        "v", transform_column("bucket[97]", "v", "long").alias("b")
+    got = {r.v: r.b for r in with_transform_column(
+        vdf, "b", "bucket[97]", "v", "long"
     ).collect()}
     assert got == {v: (bucket_hash(v, "long") & 0x7FFFFFFF) % 97 for v in vals}
 
@@ -290,7 +286,7 @@ def test_bucket_ntz_timestamp_matches_reference(spark):
 
     from evolution_spark.io.iceberg_transforms import (
         bucket_hash,
-        transform_column,
+        with_transform_column,
     )
 
     vals = [
@@ -300,8 +296,8 @@ def test_bucket_ntz_timestamp_matches_reference(spark):
         datetime.datetime(2038, 1, 19, 3, 14, 7, 999999),
     ]
     df = spark.createDataFrame([(v,) for v in vals], "ts timestamp_ntz")
-    got = {r.ts: r.b for r in df.select(
-        "ts", transform_column("bucket[16]", "ts", "timestamp").alias("b")
+    got = {r.ts: r.b for r in with_transform_column(
+        df, "b", "bucket[16]", "ts", "timestamp"
     ).collect()}
     epoch = datetime.datetime(1970, 1, 1)
     us = datetime.timedelta(microseconds=1)
@@ -419,8 +415,7 @@ def test_evolution_guard_covers_all_spec_epochs(spark, tmp_path):
 def test_staged_bucket_matches_reference_all_integral_types(spark):
     """The STAGED bucket lane (what every partitioned write uses) must
     match the python Murmur3 reference for every integral source type —
-    int/long/date/NTZ-timestamp/timestamptz — not just longs; the two
-    JVM forms share _int_value_expr so the widening can never drift."""
+    int/long/date/NTZ-timestamp/timestamptz — not just longs."""
     import datetime
 
     from pyspark.sql import functions as F

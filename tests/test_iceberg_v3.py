@@ -100,7 +100,7 @@ def test_dv_delete_and_merge_supersede(spark, tmp_path):
     import json
     from pathlib import Path
 
-    from evolution_spark.io.iceberg_meta import _read_avro
+    from evolution_spark.io.avro import _read_avro
 
     meta_dir = Path(t) / "metadata"
     hint = (meta_dir / "version-hint.text").read_text().strip()
@@ -199,10 +199,8 @@ def test_v3_append_assigns_row_lineage(spark, tmp_path):
     import json
     from pathlib import Path
 
-    from evolution_spark.io.iceberg_meta import (
-        _load_metadata,
-        _read_avro,
-    )
+    from evolution_spark.io.avro import _read_avro
+    from evolution_spark.io.iceberg_meta import _load_metadata
 
     t = str(tmp_path / "v3append")
     write_iceberg_table(_df(spark, 10), t)

@@ -124,7 +124,7 @@ def test_compaction_writes_reserved_field_ids(spark, tmp_path):
         s for s in meta["snapshots"]
         if s["snapshot-id"] == meta["current-snapshot-id"]
     )
-    from evolution_spark.io.iceberg_meta import _read_avro
+    from evolution_spark.io.avro import _read_avro
     from pathlib import Path
 
     data_manifest = next(
@@ -290,13 +290,11 @@ def test_first_row_id_inheritance_from_manifest(spark, tmp_path):
     import json
     from pathlib import Path
 
+    from evolution_spark.io.avro import _read_avro, _read_avro_with_meta, _write_avro
     from evolution_spark.io.iceberg_meta import (
         _manifest_entry_schema,
         _manifest_list_schema,
         _partition_record_schema,
-        _read_avro,
-        _read_avro_with_meta,
-        _write_avro,
     )
 
     d = str(tmp_path / "inherit")
@@ -345,12 +343,10 @@ def test_first_row_id_mixed_explicit_and_null(spark, tmp_path):
     import json
     from pathlib import Path
 
+    from evolution_spark.io.avro import _read_avro, _read_avro_with_meta, _write_avro
     from evolution_spark.io.iceberg_meta import (
         _manifest_entry_schema,
         _partition_record_schema,
-        _read_avro,
-        _read_avro_with_meta,
-        _write_avro,
     )
 
     d = str(tmp_path / "mixed_inherit")

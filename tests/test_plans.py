@@ -849,16 +849,18 @@ def test_transform_write_column_has_no_python(spark):
 
     from pyspark.sql import functions as F
 
-    from evolution_spark.io.iceberg_transforms import transform_column
+    from evolution_spark.io.iceberg_transforms import with_transform_column
 
     df = spark.createDataFrame(
         [(1, datetime.datetime(2020, 1, 2, 3, 4, 5))], "k long, ts timestamp"
     )
-    q = df.select(
-        transform_column("bucket[8]", "k", "long"),
-        transform_column("bucket[8]", "ts", "timestamptz"),
-        transform_column("month", "ts", "timestamptz"),
-    )
+    for name, transform, src in [("kb", "bucket[8]", "k"),
+                                 ("tsb", "bucket[8]", "ts"),
+                                 ("tsm", "month", "ts")]:
+        df = with_transform_column(
+            df, name, transform, src, "long" if src == "k" else "timestamptz"
+        )
+    q = df.select("kb", "tsb", "tsm")
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan
 
